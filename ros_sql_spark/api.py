@@ -175,6 +175,13 @@ def playback(
     schema = catalog.schema_of(topic)
     base = os.path.join(store_path, entry.table)
     children = [_meta_from_dict(d) for d in entry.children]
+    # each table's schema from dry-running the shred planner on an empty
+    # frame of the declared schema (as declare_topics derives the
+    # ledger): building the replay then launches no parquet footer-
+    # inference job per table
+    shredded = normalize(
+        spark.createDataFrame([], schema), list(entry.key_cols), table=entry.table
+    ).tables
     tables = {}
     # time-range data skipping: snapshot stores record per-file ts
     # min/max (record_stream_snapshot), so a [t0, t1) replay drops
@@ -212,7 +219,7 @@ def playback(
                 prune=prune if name == entry.table else child_prune,
             )
         else:
-            tables[name] = spark.read.parquet(tdir)
+            tables[name] = spark.read.schema(shredded[name].schema).parquet(tdir)
     norm = NormalizedTables(
         root=entry.table,
         keys=list(entry.key_cols),

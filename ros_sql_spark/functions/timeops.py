@@ -24,7 +24,6 @@ __all__ = [
     "ns_remainder_us",
     "timestamp_to_ns",
     "with_time_split",
-    "with_time_combined",
 ]
 
 NS_PER_SEC = 1_000_000_000
@@ -85,9 +84,3 @@ def with_time_split(df: DataFrame, ns_col: str, prefix: str | None = None) -> Da
     secs, nsecs = split_ns(ns_col)
     return df.withColumn(f"{p}_secs", secs).withColumn(f"{p}_nsecs", nsecs)
 
-
-def with_time_combined(
-    df: DataFrame, secs_col: str, nsecs_col: str, out_col: str
-) -> DataFrame:
-    """Recombine split columns into a ns long (inverse of with_time_split)."""
-    return df.withColumn(out_col, combine_ns(secs_col, nsecs_col))

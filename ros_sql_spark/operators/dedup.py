@@ -51,7 +51,6 @@ __all__ = [
     "setsim_join",
     "setsim_index",
     "setsim_join_incremental",
-    "passage_df",
     "remove_boilerplate",
     "remove_duplicate_spans",
 ]
@@ -1717,60 +1716,6 @@ def setsim_join_incremental(
         .select("id_a", "id_b", jac.alias("_jac"))
         .filter(F.col("_jac") >= threshold)
         .select("id_a", "id_b", F.round("_jac", 6).alias("jaccard"))
-    )
-
-
-def passage_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    passage_tokens: int = 10,
-) -> DataFrame:
-    """(id, pos, passage_hash) — non-overlapping ``passage_tokens``-token
-    passages per document with their 128-bit digests.
-
-    The passage decomposition behind :func:`remove_boilerplate` (CCNet-
-    style: real corpora split on paragraph breaks; token windows are the
-    degenerate form that also works for unstructured text).  Built from
-    posexplode over a pre-materialized passage array — one projection,
-    no Generate trap, order carried by ``pos`` for exact reassembly.
-    """
-    from ros_sql_spark.functions.util import ensure_scan_parallelism
-
-    # tokens materialized FIRST (round-8 review): the transform lambda
-    # below slices the tokens array per passage, and an inline
-    # tokenize() captured in the lambda body re-splits the text once
-    # per passage — O(n²/P) per document.  The multi-reference (size +
-    # slice) on the aliased column blocks CollapseProject re-inlining.
-    toked = ensure_scan_parallelism(df).select(
-        F.col(id_col), tokenize(text_col).alias("_toks")
-    )
-    toks = F.col("_toks")
-    n = F.size(toks)
-    # passage i = tokens [i*P, (i+1)*P); slice() is 1-indexed
-    # integer floor-div (never `/`: Column `/` is double division and
-    # sequence() rejects a double bound)
-    idxs = F.sequence(
-        F.lit(0), F.floor((n - 1) / F.lit(passage_tokens)).cast("int")
-    )
-    passages = F.transform(
-        idxs,
-        lambda i: F.concat_ws(
-            " ", F.slice(toks, i * passage_tokens + 1, passage_tokens)
-        ),
-    )
-    return (
-        toked.select(F.col(id_col), passages.alias("_ps"))
-        .select(
-            id_col, F.posexplode_outer("_ps").alias("pos", "passage")
-        )
-        .filter(F.col("passage").isNotNull() & (F.col("passage") != ""))
-        .select(
-            id_col,
-            "pos",
-            F.md5(F.col("passage").cast("binary")).alias("passage_hash"),
-            "passage",
-        )
     )
 
 

@@ -161,11 +161,6 @@ def normalize(
     return out
 
 
-def _nest_expr(prefix_cols: list[str], schema: T.StructType) -> F.Column:
-    """struct(...) expression rebuilding a nested struct from flat columns."""
-    return F.struct(*[F.col(c).alias(n) for c, n in zip(prefix_cols, schema.names)])
-
-
 def _rebuild(norm: NormalizedTables, table: str, keys: list[str]) -> DataFrame:
     df = norm.tables.get(table)
     metas = [m for m in norm.children if m.parent == table]

@@ -894,6 +894,9 @@ def test_components_incremental_semi_reduce_mode_equivalent(spark):
         # components loop inside the contraction may still shuffle —
         # that's the increment-sized subgraph, not the base map)
         assert "BroadcastHashJoin" in p, p
+
+
+def test_components_incremental_on_corpus_pairs(spark):
     """End-to-end with a real pair generator: base components from the
     corpus's base slice, increment pairs from setsim_join_incremental —
     final labels equal the full-graph recompute."""

@@ -456,3 +456,127 @@ def test_expire_retention_root_and_children(spark, tmp_path):
     expire(spark, store, "sensor", cutoff)
     assert snapshot_versions(spark, root)[-1] == v_root
     assert snapshot_versions(spark, child)[-1] == v_child
+
+
+def test_commit_concurrently_waits_for_every_commit(spark):
+    """The recorders' batch commit: thunks run concurrently under the
+    caller's job group, and the first failure surfaces only after every
+    other commit of the batch has finished."""
+    import threading
+    import time
+
+    from ros_sql_spark.streaming.record import _commit_concurrently
+
+    sc = spark.sparkContext
+    lock = threading.Lock()
+    started, finished, groups = [], [], []
+
+    def commit(i: int) -> None:
+        with lock:
+            started.append(i)
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        if i == 0:
+            raise RuntimeError("commit 0 failed")
+        time.sleep(0.5)
+        with lock:
+            finished.append(i)
+
+    n = min(4, sc.defaultParallelism)
+    sc.setJobGroup("rosql-commit-test", "concurrent commit")
+    try:
+        with pytest.raises(RuntimeError, match="commit 0 failed"):
+            _commit_concurrently(spark, [lambda i=i: commit(i) for i in range(n)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(started) == list(range(n))
+    assert sorted(finished) == list(range(1, n))
+    assert groups == ["rosql-commit-test"] * n
+
+
+def test_recorder_commit_failure_fails_query(spark, tmp_path, monkeypatch):
+    """A recorder whose commit for ONE table raises ends with the query
+    failed, and no other commit of that batch is still running when the
+    batch body returns (the batch stays the unit of commit)."""
+    import threading
+    import time
+
+    import ros_sql_spark.sources.jdbc as jdbc
+    import ros_sql_spark.streaming.record as record
+    from ros_sql_spark.streaming.record import record_stream_jdbc
+
+    lock = threading.Lock()
+    running: set[str] = set()
+    done: list[str] = []
+    at_return: list[set[str]] = []
+
+    def fake_commit(tbl, batch_id, url, table, key_cols, driver=None):
+        with lock:
+            running.add(table)
+        try:
+            if table == "rs_click":
+                raise RuntimeError("injected commit failure")
+            time.sleep(0.5)
+            done.append(table)
+        finally:
+            with lock:
+                running.discard(table)
+
+    real = record._commit_concurrently
+
+    def watched(spark_, commits):
+        try:
+            real(spark_, commits)
+        finally:
+            with lock:
+                at_return.append(set(running))
+
+    monkeypatch.setattr(jdbc, "jdbc_idempotent_batch", fake_commit)
+    monkeypatch.setattr(record, "_commit_concurrently", watched)
+
+    store = str(tmp_path / "store")
+    schema = _declared_schema(spark)
+    declare_topics(store, {t: schema for t in TOPIC_VALUES}, ["event_id"])
+    q = record_stream_jdbc(
+        stream_events(spark, EVENTS_PATH),
+        topic_col="event_type",
+        store_path=store,
+        checkpoint_path=str(tmp_path / "ck"),
+        url="jdbc:unused",
+    )
+    with pytest.raises(Exception, match="injected commit failure"):
+        q.awaitTermination(180)
+    assert q.exception() is not None
+    assert at_return == [set()]
+    assert sorted(done) == sorted(f"rs_{t}" for t in TOPIC_VALUES if t != "click")
+
+
+def test_playback_launches_no_job_before_action(spark, tmp_path):
+    """Building a replay reads every store table with its declared
+    schema: no footer-inference job runs until the caller's action."""
+    from ros_sql_spark.api import record
+
+    msgs = spark.createDataFrame(
+        [
+            (1, 10, (1.5, [1, 2]), [("a", 1)]),
+            (2, 20, None, []),
+            (3, 30, (2.5, None), None),
+        ],
+        "id long, ts_ns long, pose struct<x: double, cov: array<int>>, "
+        "tags array<struct<k: string, v: int>>",
+    )
+    store = str(tmp_path / "store")
+    record(spark, {"odom": msgs}, store, key_cols=["id"])
+
+    sc = spark.sparkContext
+    group = "rosql-playback-build"
+    sc.setJobGroup(group, "playback build")
+    try:
+        df = playback(spark, store, "odom")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        rows = df.collect()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r.asDict(recursive=True) for r in rows] == [
+        r.asDict(recursive=True) for r in msgs.orderBy("ts_ns").collect()
+    ]
