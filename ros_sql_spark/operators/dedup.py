@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 
 __all__ = [
     "exact_dedup",
@@ -972,7 +972,6 @@ def connected_components_star(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 40,
-    strategy: str = "join",
     small_graph_edges: int = 200_000,
 ) -> DataFrame:
     """(id, component) by LARGE-STAR / SMALL-STAR alternation (Kiveris
@@ -983,24 +982,14 @@ def connected_components_star(
     long-chain graphs, where min-label propagation needs a round per
     hop.
 
-    Two physical strategies for the per-node neighborhood minimum,
-    identical results (asserted equal in tests):
-
-    - ``strategy="join"`` (default): one groupBy computing m(u), one
-      join re-pointing edges at it — no task ever buffers a node's
-      neighbor list (a star-contraction graph develops hot roots BY
-      DESIGN: every node re-points at the component min, so the root's
-      degree approaches the component size; the groupBy streams through
-      it with a constant-size agg buffer and the join streams the
-      probe side).  The scale-robust choice for unbounded graphs.
-    - ``strategy="window"``: m(u) via ``min over partitionBy(u)`` —
-      ONE exchange per star instead of two (round-14 measured: halves
-      the per-materialization job cost, 2.0 → 1.1 s on qx70's loop),
-      but WindowExec buffers each u-group's rows in a spillable buffer,
-      so a giant component's root group lands in one task's buffer.
-      Pick it when the max component size is known-bounded (fixed
-      cohorts, capped cluster sizes), never for open-ended dedup
-      graphs.
+    Each star computes the per-node neighborhood minimum m(u) with one
+    groupBy and re-points edges at it with one join — no task ever
+    buffers a node's neighbor list (a star-contraction graph develops
+    hot roots BY DESIGN: every node re-points at the component min, so
+    the root's degree approaches the component size; the groupBy
+    streams through it with a constant-size agg buffer and the join
+    streams the probe side), so the loop is scale-robust on unbounded
+    graphs.
 
     TWO double-rounds are fused per eager localCheckpoint with a LAZY
     checkpoint between them (the materialization count, not task work,
@@ -1058,9 +1047,6 @@ def connected_components_star(
     )
     n_cur = ob0.get["n_edges"] or 0
 
-    if strategy not in ("join", "window"):
-        raise ValueError(f"unknown strategy {strategy!r}: join|window")
-
     def _star(
         edges_uv: DataFrame, large: bool, dedup: bool = True
     ) -> DataFrame:
@@ -1068,35 +1054,7 @@ def connected_components_star(
         sym = edges_uv.unionByName(
             edges_uv.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        if strategy == "window":
-            if large:
-                # one exchange: m(u) rides every row of u's partition
-                w = Window.partitionBy("u")
-                out = (
-                    sym.withColumn(
-                        "_m", F.least(F.min("v").over(w), F.col("u"))
-                    )
-                    .filter(F.col("v") > F.col("u"))
-                    .select(F.col("v").alias("u"), F.col("_m").alias("v"))
-                )
-            else:
-                # ordered window: first(v) = min (ascending), row_number
-                # picks ONE row per u to emit the (u, m) self edge —
-                # exactly once, so dedup=False rounds never compound it
-                w = Window.partitionBy("u").orderBy("v")
-                le2 = (
-                    sym.filter(F.col("v") < F.col("u"))
-                    .withColumn("_m", F.first("v").over(w))
-                    .withColumn("_rn", F.row_number().over(w))
-                )
-                out = le2.select(
-                    F.col("v").alias("u"), F.col("_m").alias("v")
-                ).unionByName(
-                    le2.filter(F.col("_rn") == 1).select(
-                        F.col("u"), F.col("_m").alias("v")
-                    )
-                )
-        elif large:
+        if large:
             # m(u) over ALL neighbors and self; larger neighbors re-point
             m = sym.groupBy("u").agg(
                 F.least(F.min("v"), F.first("u")).alias("_m")

@@ -5781,21 +5781,15 @@ def qx70_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/spatial.py::grid_radius_join (3×3-cell complete
     candidate generation — the all-pairs ε-graph without a cartesian),
     clusters from operators/dedup.py::connected_components_star over
-    the core-core edges (O(log²) rounds on ANY topology — near the
+    the core-core edges (1,072 cores / 1,684 edges / 14 clusters on a
+    FIXED 1,500-point cohort, the same at every sf).  That graph is
+    far below the operator's small-graph threshold, so it never enters
+    a distributed loop: the labels come from ONE union-find task
+    (round 14: 6.07 → 1.78 s floor).  Star is still the right engine
+    should the cohort ever grow past the threshold — near the
     percolation threshold DBSCAN clusters can be long chains, where
-    min-label propagation needs a round per hop; MEASURED on this
-    exact graph (1,072 cores / 1,684 edges / 14 clusters): the
-    propagation loop does NOT converge in its 50-hop budget while
-    star finishes — the engine choice is load-bearing).  The local
-    cost is the star loop's per-materialization driver overhead on a
-    FIXED 1,500-point cohort — constant at every sf, not a scale term;
-    round 14 cut it 3.4× (6.07 → 1.78 s floor): the 1,684-edge ε-graph
-    is below the operator's small-graph threshold, so the whole star
-    loop collapses to ONE union-find task (the loop itself also gained
-    fused rounds; ``strategy="window"`` is passed for the loop path —
-    safe here because the max component size is cohort-bounded ≤ 1,072
-    — see the strategy contract in connected_components_star's
-    docstring).  Border points
+    min-label propagation needs a round per hop and star needs
+    O(log²) rounds.  Border points
     attach to the MIN cluster label among their core neighbors
     (deterministic tie-break; plain DBSCAN leaves it
     arrival-order-dependent), noise is excluded.  Everything integer
@@ -5843,8 +5837,7 @@ def qx70_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_id", "b_id")
     )
     comp = connected_components_star(
-        core_edges, nodes=core, src_col="p_id", dst_col="b_id",
-        strategy="window",  # cohort-bounded groups — see docstrings
+        core_edges, nodes=core, src_col="p_id", dst_col="b_id"
     )  # (id, component)
     core_out = comp.select(
         F.col("id").alias("c_custkey"),

@@ -37,6 +37,19 @@ scope:
   the ONLY deleting operation, explicitly invoked, never part of a
   commit.
 
+Exactly-once batch watermark (the batch-id idempotent sink of
+Structured Streaming): a micro-batch commits with tag ``batch:<id>``;
+every manifest carries ``last_batch``, the monotone max of the previous
+manifest's watermark and its own tag's id (untagged commits carry it
+forward unchanged); a replayed batch whose id the head's watermark
+already covers is skipped.  The rule lives HERE and nowhere else:
+:func:`_next_manifest` is the only constructor of a manifest record,
+:func:`_committed_batch` the only reader of its watermark, and the
+batch sinks (:func:`snapshot_append_batch`,
+:func:`snapshot_merge_batch`, :func:`snapshot_fold_batch`,
+:func:`snapshot_commit_staged_files`) and the multi-table crash-recovery
+reader (:func:`snapshot_pre_state`) all go through them.
+
 Caveat (honest): create-exclusive is atomic on HDFS-like filesystems
 and local disk; object stores without atomic create-if-absent (plain
 S3) need an external lock or a DynamoDB-style conditional put — the
@@ -49,6 +62,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +86,9 @@ __all__ = [
     "snapshot_read_incremental",
     "snapshot_history",
     "snapshot_restore",
+    "snapshot_fold_batch",
+    "snapshot_pre_state",
+    "snapshot_watermark",
     "SnapshotConflict",
 ]
 
@@ -119,6 +136,90 @@ def _read_manifest(spark: SparkSession, table: str, version: int) -> dict:
     finally:
         stream.close()
     return json.loads(data.decode("utf-8"))
+
+
+def _head(spark: SparkSession, table: str) -> tuple[int, dict]:
+    """(latest version, its manifest); ``(0, {})`` for a table with no
+    snapshot yet — the version lookup of every batch sink, pinned as
+    their commit's ``expected_version``."""
+    versions = _list_versions(spark, table)
+    if not versions:
+        return 0, {}
+    return versions[-1], _read_manifest(spark, table, versions[-1])
+
+
+def _tag_batch(tag: str | None) -> int | None:
+    """The id of a ``batch:<id>`` tag; None for any other tag."""
+    if tag is not None and tag.startswith("batch:"):
+        return int(tag[6:])
+    return None
+
+
+def _committed_batch(manifest: dict) -> int | None:
+    """The batch watermark of one manifest — THE reader: its
+    ``last_batch``, else (manifests from before ``last_batch`` existed)
+    the id of its ``batch:<id>`` tag, else None."""
+    lb = manifest.get("last_batch")
+    return lb if lb is not None else _tag_batch(manifest.get("tag"))
+
+
+def _covers(manifest: dict, batch_id: int) -> bool:
+    """Whether ``manifest``'s watermark already covers ``batch_id`` (a
+    replayed batch: skip it)."""
+    lb = _committed_batch(manifest)
+    return lb is not None and lb >= batch_id
+
+
+def _next_manifest(
+    prev: dict,
+    version: int,
+    files: list[str],
+    schema_json: str,
+    *,
+    new_stats: dict | None = None,
+    stats_cols: list[str] | None = None,
+    tag: str | None = None,
+    meta: dict | None = None,
+) -> dict:
+    """The manifest record of ``version`` on top of ``prev`` (the
+    previous head's manifest, ``{}`` for a new table) — the ONLY
+    constructor of a manifest, so every carry-forward rule lives in one
+    place.  Pure dict work (no JVM): the pure-Python staged commit uses
+    it too.
+
+    - ``stats_cols`` is sticky: None inherits ``prev``'s;
+    - files carried from ``prev`` keep their recorded stats,
+      ``new_stats`` covers this commit's new files;
+    - ``meta`` carries forward unless replaced;
+    - ``last_batch`` is the monotone max of ``prev``'s watermark and a
+      ``batch:<id>`` ``tag`` — every commit carries it, so an
+      interleaved untagged commit (manual append, compaction, DML)
+      cannot hide the watermark from a redelivered batch.
+    """
+    manifest = {
+        "version": version, "files": list(files), "schema": schema_json
+    }
+    if stats_cols is None:
+        stats_cols = prev.get("stats_cols")
+    if stats_cols:
+        prev_stats = prev.get("stats", {})
+        stats = {f: prev_stats[f] for f in files if f in prev_stats}
+        stats.update(new_stats or {})
+        manifest["stats_cols"] = list(stats_cols)
+        if stats:
+            manifest["stats"] = stats
+    if meta is None:
+        meta = prev.get("meta")
+    if meta is not None:
+        manifest["meta"] = meta
+    if tag is not None:
+        manifest["tag"] = tag
+    batches = [
+        b for b in (_committed_batch(prev), _tag_batch(tag)) if b is not None
+    ]
+    if batches:
+        manifest["last_batch"] = max(batches)
+    return manifest
 
 
 def _publish_manifest(
@@ -531,39 +632,16 @@ def snapshot_commit(
         _data_files(spark, staging),
         list(stats_cols) if stats_cols else None,
     )
-    files = carried + new_files
-    manifest = {
-        "version": new_version,
-        "files": files,
-        "schema": df.schema.json(),
-    }
-    if stats_cols:
-        prev_stats = prev_manifest.get("stats", {})
-        stats = {f: prev_stats[f] for f in carried if f in prev_stats}
-        stats.update(new_stats)
-        manifest["stats_cols"] = list(stats_cols)
-        if stats:
-            manifest["stats"] = stats
-    # exactly-once bookkeeping: the highest streaming batch id ever
-    # committed rides on EVERY manifest (carried forward by untagged
-    # commits too), so an interleaved manual commit / replace_where
-    # upsert between a stream failure and its restart cannot hide the
-    # batch watermark from the redelivery check in
-    # :func:`snapshot_append_batch`.
-    # cross-table binding metadata: explicit value wins, otherwise the
-    # previous snapshot's carries forward (appends/compactions/DML keep
-    # the binding alive — the last_batch discipline)
-    carried_meta = meta if meta is not None else prev_manifest.get("meta")
-    if carried_meta is not None:
-        manifest["meta"] = carried_meta
-    last_batch = prev_manifest.get("last_batch")
-    if tag is not None:
-        manifest["tag"] = tag
-        if tag.startswith("batch:"):
-            bid = int(tag[6:])
-            last_batch = bid if last_batch is None else max(last_batch, bid)
-    if last_batch is not None:
-        manifest["last_batch"] = last_batch
+    manifest = _next_manifest(
+        prev_manifest,
+        new_version,
+        carried + new_files,
+        df.schema.json(),
+        new_stats=new_stats,
+        stats_cols=stats_cols,
+        tag=tag,
+        meta=meta,
+    )
     _publish_manifest(spark, table, new_version, manifest)
     return new_version
 
@@ -584,18 +662,9 @@ def snapshot_append_batch(
     ``meta`` replaces the carried cross-table binding when the commit
     lands (skipped replays leave the existing binding untouched — it
     was already correct when the batch first committed)."""
-    spark = df.sparkSession
-    versions = _list_versions(spark, table)
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is None:
-            # pre-last_batch manifests: fall back to the newest tag
-            t = m.get("tag", "")
-            if t.startswith("batch:"):
-                committed = int(t[6:])
-        if committed is not None and committed >= batch_id:
-            return False  # replayed batch: already committed
+    _, head = _head(df.sparkSession, table)
+    if _covers(head, batch_id):
+        return False  # replayed batch: already committed
     snapshot_commit(
         df, table, mode="append", tag=f"batch:{batch_id}",
         stats_cols=stats_cols, meta=meta,
@@ -689,16 +758,7 @@ def snapshot_commit_staged_files(
     prev: dict = {}
     if versions:
         prev = _local_manifest(table, versions[-1])
-        committed = prev.get("last_batch")
-        if committed is None:
-            t = prev.get("tag", "")
-            if t.startswith("batch:"):
-                committed = int(t[6:])
-        if (
-            batch_id is not None
-            and committed is not None
-            and committed >= batch_id
-        ):
+        if batch_id is not None and _covers(prev, batch_id):
             for p in staged:
                 try:
                     os.remove(p)
@@ -740,26 +800,14 @@ def snapshot_commit_staged_files(
         None, moved, list(stats_cols) if stats_cols else None
     )
     carried = list(prev.get("files", [])) if mode == "append" else []
-    manifest = {
-        "version": new_version,
-        "files": carried + new_files,
-        "schema": prev["schema"] if versions else schema_json,
-    }
-    last_batch = prev.get("last_batch")
-    if batch_id is not None:
-        manifest["tag"] = f"batch:{batch_id}"
-        last_batch = max(batch_id, last_batch or 0)
-    if last_batch is not None:
-        manifest["last_batch"] = last_batch
-    if stats_cols:
-        prev_stats = prev.get("stats", {})
-        stats = {f: prev_stats[f] for f in carried if f in prev_stats}
-        stats.update(new_stats)
-        manifest["stats_cols"] = list(stats_cols)
-        if stats:
-            manifest["stats"] = stats
-    if prev.get("meta") is not None:
-        manifest["meta"] = prev["meta"]
+    manifest = _next_manifest(
+        prev,
+        new_version,
+        carried + new_files,
+        prev["schema"] if versions else schema_json,
+        new_stats=new_stats,
+        tag=None if batch_id is None else f"batch:{batch_id}",
+    )
     os.makedirs(mdir, exist_ok=True)
     tmp = os.path.join(mdir, f".v{new_version:05d}.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:
@@ -1289,30 +1337,9 @@ def snapshot_delete(
         # zero bytes read or written (an empty-frame snapshot_commit
         # would still write one empty part file).  The rename-without-
         # overwrite publish keeps optimistic concurrency intact.
-        new_manifest = {
-            "version": latest + 1,
-            "files": carried,
-            "schema": manifest["schema"],
-        }
-        if manifest.get("stats_cols"):
-            new_manifest["stats_cols"] = manifest["stats_cols"]
-        kept_stats = {f: stats[f] for f in carried if f in stats}
-        if kept_stats:
-            new_manifest["stats"] = kept_stats
-        # batch-tag bookkeeping must match snapshot_commit's (round-8
-        # review: this hand-built path recorded the tag but never
-        # bumped last_batch, so a batch-tagged retention delete left
-        # the exactly-once watermark behind and a replay re-committed)
-        last_batch = manifest.get("last_batch")
-        if tag is not None and tag.startswith("batch:"):
-            bid = int(tag[6:])
-            last_batch = bid if last_batch is None else max(last_batch, bid)
-        if last_batch is not None:
-            new_manifest["last_batch"] = last_batch
-        if manifest.get("meta") is not None:
-            new_manifest["meta"] = manifest["meta"]
-        if tag is not None:
-            new_manifest["tag"] = tag
+        new_manifest = _next_manifest(
+            manifest, latest + 1, carried, manifest["schema"], tag=tag
+        )
         _publish_manifest(spark, table, latest + 1, new_manifest)
         return latest + 1
     kept = (
@@ -1407,7 +1434,7 @@ def snapshot_history(spark: SparkSession, table: str) -> list[dict]:
                 "version": v,
                 "n_files": len(m["files"]),
                 "tag": m.get("tag"),
-                "last_batch": m.get("last_batch"),
+                "last_batch": _committed_batch(m),
                 "stats_cols": m.get("stats_cols"),
             }
         )
@@ -1429,23 +1456,14 @@ def snapshot_restore(spark: SparkSession, table: str, version: int) -> int:
     src = _read_manifest(spark, table, version)
     head = _read_manifest(spark, table, latest)
     new_version = latest + 1
-    manifest = {
-        "version": new_version,
-        "files": src["files"],
-        "schema": src["schema"],
-        "tag": f"restore:{version}",
-    }
-    # keep data-skipping intact: restored files had stats in their own
-    # manifest; the watermark must be the HEAD's (monotone, so replayed
+    # the restored version's files, stats (data skipping stays intact)
+    # and meta binding; the HEAD's watermark (monotone, so replayed
     # stream batches still skip after a rollback)
-    if "stats_cols" in src:
-        manifest["stats_cols"] = src["stats_cols"]
-    if "stats" in src:
-        manifest["stats"] = src["stats"]
-    if src.get("meta") is not None:
-        manifest["meta"] = src["meta"]  # the restored state's binding
-    if head.get("last_batch") is not None:
-        manifest["last_batch"] = head["last_batch"]
+    base = dict(src, last_batch=_committed_batch(head))
+    manifest = _next_manifest(
+        base, new_version, src["files"], src["schema"],
+        tag=f"restore:{version}",
+    )
     _publish_manifest(spark, table, new_version, manifest)
     return new_version
 
@@ -1472,29 +1490,89 @@ def snapshot_merge_batch(
     file acquires bounds).  An existing table's own stats_cols are
     never narrowed — the default never overrides a non-empty
     setting."""
-    spark = df.sparkSession
-    versions = _list_versions(spark, table)
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is None:
-            # pre-last_batch manifests: fall back to the newest tag
-            # (same fallback as snapshot_append_batch — round-8 review:
-            # without it a replayed stale batch re-MERGED over newer
-            # keys on a tag-only head)
-            t = m.get("tag", "")
-            if t.startswith("batch:"):
-                committed = int(t[6:])
-        if committed is not None and committed >= batch_id:
-            return False
-        if stats_cols is None and not m.get("stats_cols"):
-            stats_cols = list(keys)
-    elif stats_cols is None:
+    _, head = _head(df.sparkSession, table)
+    if _covers(head, batch_id):
+        return False  # replayed batch: already merged
+    if stats_cols is None and not head.get("stats_cols"):
         stats_cols = list(keys)
     snapshot_merge(
         df, table, keys, tag=f"batch:{batch_id}", stats_cols=stats_cols
     )
     return True
+
+
+def snapshot_fold_batch(
+    fresh: DataFrame,
+    table: str,
+    batch_id: int,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> bool:
+    """Idempotent per-micro-batch READ-MERGE-OVERWRITE: the table is
+    replaced by ``merge(stored, fresh)`` (by ``fresh`` when it does not
+    exist yet) under tag ``batch:<id>``, unless the watermark already
+    covers ``batch_id``.  The sink of every mergeable summary whose
+    state is a REPLACE, not an append (the streaming sketches): a
+    replayed batch would double-count if re-merged, so the skip is
+    correctness, not hygiene.  Returns whether a commit happened.
+
+    Read-merge-overwrite is single-writer by contract, but the OCC pin
+    is free (the read version is already in hand): the commit's
+    ``expected_version`` is the version the merge read, so two writers
+    accidentally pointed at one table fail loudly with
+    :class:`SnapshotConflict` instead of silently losing a merge."""
+    spark = fresh.sparkSession
+    version, head = _head(spark, table)
+    if _covers(head, batch_id):
+        return False  # replayed batch: already merged
+    if head:
+        out = merge(snapshot_read(spark, table, version=version), fresh)
+    else:
+        out = fresh
+    snapshot_commit(
+        out, table, mode="overwrite", tag=f"batch:{batch_id}",
+        expected_version=version,
+    )
+    return True
+
+
+def snapshot_pre_state(
+    spark: SparkSession, table: str, batch_id: int
+) -> tuple[DataFrame | None, bool]:
+    """(state BEFORE this batch, already_committed_for_this_batch) —
+    the crash-recovery reader of a sink that commits several tables per
+    batch (streaming dedup, curate, drift, profile, quality).
+
+    If the table's head watermark already covers ``batch_id`` (a
+    crashed attempt or a replay), the pre-batch state is the newest
+    version whose watermark PRECEDES the batch — found by walking
+    versions backward, NOT by assuming ``versions[-2]``: maintenance
+    commits (compaction, re-index) carry the watermark forward and can
+    stack versions between the crashed attempt and the replay, and a
+    naive previous-version read would probe POST-batch state (for the
+    dedup index: the self-pairing re-drop hazard time travel exists to
+    prevent).  ``(None, True)``: every retained version covers the
+    batch — either its first-ever commit or vacuumed history; callers
+    tell the two apart by ``versions[0] == 1``."""
+    versions = _list_versions(spark, table)
+    if not versions:
+        return None, False
+    for i, v in enumerate(reversed(versions)):
+        if not _covers(_read_manifest(spark, table, v), batch_id):
+            return snapshot_read(spark, table, version=v), i > 0
+    return None, True
+
+
+def snapshot_watermark(
+    spark: SparkSession, table: str
+) -> tuple[int, int | None]:
+    """(latest version, its batch watermark) — None for a table no
+    batch sink has committed to.  Maintenance that must refuse to run
+    over a half-committed multi-table batch compares these across
+    tables and pins the versions as its ``expected_version``."""
+    version, head = _head(spark, table)
+    if not head:
+        raise FileNotFoundError(f"no snapshots at {table}")
+    return version, _committed_batch(head)
 
 
 def snapshot_merge_stream(

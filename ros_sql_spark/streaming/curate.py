@@ -114,10 +114,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ros_sql_spark.sources.snapshot import snapshot_commit, snapshot_read
+from ros_sql_spark.sources.snapshot import (
+    snapshot_commit,
+    snapshot_pre_state,
+    snapshot_read,
+)
 from ros_sql_spark.streaming.dedup import (
     _T_DOCS,
-    _pre_state,
     setsim_corpus_read,
     setsim_ingest_batch,
 )
@@ -196,9 +199,9 @@ def curate_ingest_batch(
     # implies every table already landed — return the COMMITTED row
     # verbatim instead of recomputing.  (Recomputing was also WRONG
     # after a maintenance vacuum reclaimed the pre-batch versions:
-    # _pre_state then yields an empty base and the dedup fast path
+    # snapshot_pre_state then yields an empty base and the dedup fast path
     # reported n_kept = the whole corpus — round-9 review finding.)
-    if _pre_state(spark, f"{store}/{_T_LEDGER}", batch_id)[1]:
+    if snapshot_pre_state(spark, f"{store}/{_T_LEDGER}", batch_id)[1]:
         r = (
             snapshot_read(spark, f"{store}/{_T_LEDGER}")
             .filter(F.col("batch_id") == batch_id)
@@ -376,10 +379,10 @@ def curate_ingest_batch(
         def _empty(schema: str) -> DataFrame:
             return spark.createDataFrame([], schema)
 
-        # one _pre_state walk per table per batch — the (state, done)
+        # one snapshot_pre_state walk per table per batch — the (state, done)
         # pairs are reused by the commit loop below
         vec_pre = {
-            n: _pre_state(spark, f"{store}/{n}", batch_id)
+            n: snapshot_pre_state(spark, f"{store}/{n}", batch_id)
             for n in (_T_VECS, _T_VBUCKETS)
         }
         base_vecs = vec_pre[_T_VECS][0]
@@ -523,7 +526,7 @@ def curate_ingest_batch(
     #    budgets against the RUNNING post-dedup spend, on exactly this
     #    batch's PUBLISHED docs — never pre-dedup, so the duplicate
     #    rate can't overfill a budget.  State = the ``mix`` table; the
-    #    pre-batch spend comes from _pre_state's time travel, so a
+    #    pre-batch spend comes from snapshot_pre_state's time travel, so a
     #    crash replay re-spends against the same balance it saw the
     #    first time (deterministic kept set, idempotent commit).
     if budgets is not None:
@@ -532,7 +535,9 @@ def curate_ingest_batch(
                 f"curate mixture mode needs {budget_source_col!r} on the "
                 "input batch (budgets are per-source)"
             )
-        mix_pre, mix_done = _pre_state(spark, f"{store}/{_T_MIX}", batch_id)
+        mix_pre, mix_done = snapshot_pre_state(
+            spark, f"{store}/{_T_MIX}", batch_id
+        )
         if not mix_done:
             from ros_sql_spark.functions.text import token_count_bpe
             from ros_sql_spark.operators.sampling import token_budget_mix
@@ -634,7 +639,7 @@ def curate_ingest_batch(
     }
     # ledger LAST: its watermark implies the whole batch landed.  The
     # pre-state probe makes redelivery a no-op (never double-counts).
-    _, done = _pre_state(spark, f"{store}/{_T_LEDGER}", batch_id)
+    _, done = snapshot_pre_state(spark, f"{store}/{_T_LEDGER}", batch_id)
     if not done:
         snapshot_commit(
             spark.createDataFrame(

@@ -56,11 +56,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ros_sql_spark.sources.snapshot import (
-    _list_versions,
-    _read_manifest,
     snapshot_commit,
     snapshot_merge,
+    snapshot_meta,
+    snapshot_pre_state,
     snapshot_read,
+    snapshot_versions,
+    snapshot_watermark,
 )
 
 __all__ = [
@@ -76,35 +78,6 @@ _T_SETS = "sets"
 _T_PREFIX = "prefix"
 _T_FREQ = "freq"
 _T_LABELS = "labels"
-
-
-def _pre_state(
-    spark: SparkSession, table: str, batch_id: int
-) -> tuple[DataFrame | None, bool]:
-    """(state BEFORE this batch, already_committed_for_this_batch).
-
-    If the table's head already carries ``last_batch >= batch_id`` (a
-    crashed attempt or a replay), the pre-batch state is the newest
-    version whose watermark PRECEDES the batch — found by walking
-    versions backward, NOT by assuming ``versions[-2]``: maintenance
-    commits (compaction, re-index) carry the watermark forward and can
-    stack versions between the crashed attempt and the replay, and a
-    naive previous-version read would probe POST-batch index state,
-    recreating exactly the self-pairing re-drop hazard time travel
-    exists to prevent."""
-    versions = _list_versions(spark, table)
-    if not versions:
-        return None, False
-    head = _read_manifest(spark, table, versions[-1])
-    lb = head.get("last_batch")
-    if lb is None or lb < batch_id:
-        return snapshot_read(spark, table), False
-    for v in reversed(versions[:-1]):
-        m = _read_manifest(spark, table, v)
-        mlb = m.get("last_batch")
-        if mlb is None or mlb < batch_id:
-            return snapshot_read(spark, table, version=v), True
-    return None, True
 
 
 def setsim_ingest_batch(
@@ -133,7 +106,7 @@ def setsim_ingest_batch(
         n: f"{store}/{n}"
         for n in (_T_DOCS, _T_SETS, _T_PREFIX, _T_FREQ, _T_LABELS)
     }
-    pre = {n: _pre_state(spark, t[n], batch_id) for n in t}
+    pre = {n: snapshot_pre_state(spark, t[n], batch_id) for n in t}
     batch = batch_df.select(
         F.col(id_col).cast("bigint").alias(id_col), F.col(text_col)
     )
@@ -160,14 +133,7 @@ def setsim_ingest_batch(
         #    (versions[0] == 1); otherwise the pre-batch state was
         #    VACUUMED and recomputing would silently mis-account —
         #    raise instead.
-        acct = (
-            _read_manifest(
-                spark,
-                t[_T_DOCS],
-                _list_versions(spark, t[_T_DOCS])[-1],
-            ).get("meta")
-            or {}
-        ).get("acct")
+        acct = (snapshot_meta(spark, t[_T_DOCS]) or {}).get("acct")
         if acct is not None and acct.get("batch") == batch_id:
             n_batch = int(acct["n_batch"])
             n_kept = int(acct["n_kept"])
@@ -178,7 +144,10 @@ def setsim_ingest_batch(
                 "committed": [],
             }
         pre_docs_df = pre[_T_DOCS][0]
-        if pre_docs_df is None and _list_versions(spark, t[_T_DOCS])[0] != 1:
+        if (
+            pre_docs_df is None
+            and snapshot_versions(spark, t[_T_DOCS])[0] != 1
+        ):
             raise RuntimeError(
                 f"setsim_ingest_batch: replay of batch {batch_id} cannot "
                 "be accounted — the pre-batch docs versions were vacuumed "
@@ -211,7 +180,7 @@ def setsim_ingest_batch(
         if (
             done
             and state is None
-            and _list_versions(spark, t[name])[0] != 1
+            and snapshot_versions(spark, t[name])[0] != 1
         ):
             raise RuntimeError(
                 f"setsim_ingest_batch: partial replay of batch {batch_id} "
@@ -474,10 +443,8 @@ def setsim_reindex(
     pinned: dict[str, int] = {}
 
     def _lb(name: str):
-        tbl = f"{store}/{name}"
-        vs = _list_versions(spark, tbl)
-        pinned[name] = vs[-1]
-        return _read_manifest(spark, tbl, vs[-1]).get("last_batch")
+        pinned[name], lb = snapshot_watermark(spark, f"{store}/{name}")
+        return lb
 
     docs_lb = _lb(_T_DOCS)
     for name in (_T_SETS, _T_PREFIX, _T_FREQ, _T_LABELS):

@@ -37,9 +37,9 @@ from ros_sql_spark.operators.drift import cusum_scores
 from ros_sql_spark.sources.snapshot import (
     snapshot_merge,
     snapshot_meta,
+    snapshot_pre_state,
     snapshot_read,
 )
-from ros_sql_spark.streaming.dedup import _pre_state
 
 __all__ = ["drift_ingest_batch", "drift_report_read", "drift_ingest_stream"]
 
@@ -64,7 +64,7 @@ def drift_ingest_batch(
     timestamps are dropped (no day to land on)."""
     spark = batch_df.sparkSession
     table = f"{store}/{_T_DAILY}"
-    pre, done = _pre_state(spark, table, batch_id)
+    pre, done = snapshot_pre_state(spark, table, batch_id)
     if done:
         # defensive read (round-13 ADVICE): a head manifest written
         # outside this module may lack meta — a redelivered batch must

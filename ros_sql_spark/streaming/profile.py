@@ -72,8 +72,11 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ros_sql_spark.sources.snapshot import snapshot_merge, snapshot_meta
-from ros_sql_spark.streaming.dedup import _pre_state
+from ros_sql_spark.sources.snapshot import (
+    snapshot_merge,
+    snapshot_meta,
+    snapshot_pre_state,
+)
 from ros_sql_spark.streaming.util import (
     merged_multiplicities,
     multiplicity_delta,
@@ -129,7 +132,7 @@ def profile_ingest_batch(
         list(columns) + ([quantile_key] if quantile_key else [])
     )
     table = f"{store}/{_T_VALUES}"
-    pre, done = _pre_state(spark, table, batch_id)
+    pre, done = snapshot_pre_state(spark, table, batch_id)
     if done:
         # defensive read (the drift.py round-13 ADVICE precedent): a
         # head written outside this module may lack meta — a

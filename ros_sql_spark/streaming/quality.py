@@ -43,9 +43,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from ros_sql_spark.sources.snapshot import (
     snapshot_merge,
     snapshot_meta,
+    snapshot_pre_state,
     snapshot_read,
 )
-from ros_sql_spark.streaming.dedup import _pre_state
 from ros_sql_spark.streaming.util import (
     merged_multiplicities,
     multiplicity_delta,
@@ -83,7 +83,7 @@ def quality_ingest_batch(
     """
     spark = batch_df.sparkSession
     table = f"{store}/{_T_COUNTS}"
-    pre, done = _pre_state(spark, table, batch_id)
+    pre, done = snapshot_pre_state(spark, table, batch_id)
     if done:
         # defensive read (the drift.py round-13 ADVICE precedent)
         return dict((snapshot_meta(spark, table) or {}).get("checks", {}))

@@ -9,13 +9,12 @@ ever flowed, the bounded-state property every streaming cardinality
 job needs (an exact streaming distinct-count's state grows without
 bound).
 
-Exactly-once: the merged sketch is a REPLACE, not an append, so the
-commit goes through ``snapshot_commit(mode="overwrite")`` guarded by
-the same ``batch:<id>`` watermark discipline as
-``snapshot_append_batch`` — a redelivered batch sees its id at-or-below
-the stored ``last_batch`` and skips (re-merging would be harmlessly
-idempotent for a KMV union, but skipping keeps version history
-replay-clean).
+Exactly-once: the merged sketch is a REPLACE, not an append, so every
+``*_batch`` sink here commits through ``snapshot_fold_batch`` — the
+read-merge-overwrite sink that owns the ``batch:<id>`` watermark
+check and the OCC pin; a redelivered batch is skipped (re-merging
+would be harmlessly idempotent for a KMV union, but would double-count
+Count-Min and Misra–Gries counters and re-weight quantile samples).
 
 Batch-equivalence (asserted in tests): after the stream drains, the
 stored sketch — and every estimate derived from it — is IDENTICAL to
@@ -36,12 +35,7 @@ from ros_sql_spark.operators.sketch import (
     kmv_sketch,
     quantile_sketch,
 )
-from ros_sql_spark.sources.snapshot import (
-    _list_versions,
-    _read_manifest,
-    snapshot_commit,
-    snapshot_read,
-)
+from ros_sql_spark.sources.snapshot import snapshot_fold_batch, snapshot_read
 
 __all__ = ["kmv_merge", "kmv_sketch_batch", "kmv_sketch_stream",
            "topk_merge", "topk_sketch_batch", "topk_sketch_stream",
@@ -70,30 +64,12 @@ def kmv_sketch_batch(
     k: int,
 ) -> bool:
     """Merge one micro-batch into the stored sketch table, idempotently
-    (``batch:<id>`` watermark — the overwrite twin of
-    ``snapshot_append_batch``).  Returns whether a commit happened."""
-    spark = batch_df.sparkSession
+    (``snapshot_fold_batch``: ``batch:<id>`` watermark, OCC-pinned
+    overwrite).  Returns whether a commit happened."""
     fresh = kmv_sketch(batch_df, set_col, key_col, k)
-    versions = _list_versions(spark, table)
-    expected = versions[-1] if versions else 0
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is not None and committed >= batch_id:
-            return False  # replayed batch: already merged
-        stored = snapshot_read(spark, table)
-        merged = kmv_merge(stored, fresh, set_col, k)
-    else:
-        merged = fresh
-    # read-merge-overwrite is single-writer by contract, but the OCC pin
-    # is free (the read version is already in hand): two writers
-    # accidentally pointed at one sketch table fail loudly with
-    # SnapshotConflict instead of silently losing a merge.
-    snapshot_commit(
-        merged, table, mode="overwrite", tag=f"batch:{batch_id}",
-        expected_version=expected,
+    return snapshot_fold_batch(
+        fresh, table, batch_id, lambda st, fr: kmv_merge(st, fr, set_col, k)
     )
-    return True
 
 
 def kmv_sketch_stream(
@@ -144,29 +120,11 @@ def cm_build_batch(
     width: int,
 ) -> bool:
     """Merge one micro-batch's counters into the stored Count-Min
-    table, idempotently (``batch:<id>`` watermark on the overwrite
-    path, like :func:`kmv_sketch_batch` — a replayed batch would
-    DOUBLE-COUNT if re-merged, so the skip is correctness here, not
-    just hygiene).  Returns whether a commit happened."""
-    spark = batch_df.sparkSession
+    table, idempotently (``snapshot_fold_batch``, like
+    :func:`kmv_sketch_batch` — a replayed batch would DOUBLE-COUNT if
+    re-merged).  Returns whether a commit happened."""
     fresh = cm_build(batch_df, key_col, depth, width)
-    versions = _list_versions(spark, table)
-    expected = versions[-1] if versions else 0
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is not None and committed >= batch_id:
-            return False  # replayed batch: re-merging would double-count
-        merged = cm_merge(snapshot_read(spark, table), fresh)
-    else:
-        merged = fresh
-    # same OCC pin as kmv_sketch_batch: a lost CM merge is silent
-    # UNDER-counting — misconfigured dual writers must fail loudly.
-    snapshot_commit(
-        merged, table, mode="overwrite", tag=f"batch:{batch_id}",
-        expected_version=expected,
-    )
-    return True
+    return snapshot_fold_batch(fresh, table, batch_id, cm_merge)
 
 
 def cm_build_stream(
@@ -217,27 +175,13 @@ def quantile_sketch_batch(
     k: int,
 ) -> bool:
     """Merge one micro-batch into the stored quantile sketch,
-    idempotently (``batch:<id>`` watermark; OCC-pinned commit like
+    idempotently (``snapshot_fold_batch``, like
     :func:`kmv_sketch_batch`).  Returns whether a commit happened."""
-    spark = batch_df.sparkSession
     fresh = quantile_sketch(batch_df, group_col, value_col, key_col, k)
-    versions = _list_versions(spark, table)
-    expected = versions[-1] if versions else 0
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is not None and committed >= batch_id:
-            return False  # replayed batch: re-merging would re-weight rows
-        merged = quantile_merge(
-            snapshot_read(spark, table), fresh, group_col, k
-        )
-    else:
-        merged = fresh
-    snapshot_commit(
-        merged, table, mode="overwrite", tag=f"batch:{batch_id}",
-        expected_version=expected,
+    return snapshot_fold_batch(
+        fresh, table, batch_id,
+        lambda st, fr: quantile_merge(st, fr, group_col, k),
     )
-    return True
 
 
 def quantile_sketch_stream(
@@ -320,31 +264,16 @@ def topk_sketch_batch(
     k: int,
 ) -> bool:
     """Merge one micro-batch's heavy-hitters summary into the stored
-    sketch table, idempotently (``batch:<id>`` watermark; OCC-pinned
-    overwrite like :func:`kmv_sketch_batch` — a replayed batch would
-    DOUBLE-COUNT survivors if re-merged).  Returns whether a commit
-    happened."""
+    sketch table, idempotently (``snapshot_fold_batch``, like
+    :func:`kmv_sketch_batch` — a replayed batch would DOUBLE-COUNT
+    survivors if re-merged).  Returns whether a commit happened."""
     from ros_sql_spark.operators.sketch import topk_sketch
 
-    spark = batch_df.sparkSession
     fresh = topk_sketch(batch_df, group_col, key_col, k)
-    versions = _list_versions(spark, table)
-    expected = versions[-1] if versions else 0
-    if versions:
-        m = _read_manifest(spark, table, versions[-1])
-        committed = m.get("last_batch")
-        if committed is not None and committed >= batch_id:
-            return False  # replayed batch: re-merging would double-count
-        merged = topk_merge(
-            snapshot_read(spark, table), fresh, group_col, key_col, k
-        )
-    else:
-        merged = fresh
-    snapshot_commit(
-        merged, table, mode="overwrite", tag=f"batch:{batch_id}",
-        expected_version=expected,
+    return snapshot_fold_batch(
+        fresh, table, batch_id,
+        lambda st, fr: topk_merge(st, fr, group_col, key_col, k),
     )
-    return True
 
 
 def topk_sketch_stream(

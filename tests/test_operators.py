@@ -850,12 +850,54 @@ def test_components_incremental_delta_composes_to_full_map(spark):
     )
 
 
-def test_components_incremental_semi_reduce_mode_equivalent(spark):
+def _base_scan_join_paths(plan, marker: str) -> list[list[str]]:
+    """For every file scan in the executed ``plan`` whose root path
+    holds ``marker``: the node names from that scan up to (and
+    including) its nearest join ancestor.  Descends into AQE's final
+    plan, its query stages and reused exchanges, which are not
+    ordinary children."""
+    out: list[list[str]] = []
+
+    def kids(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        if name.endswith("QueryStageExec"):
+            return [node.plan()]
+        if name == "ReusedExchangeExec":
+            return [node.child()]
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def walk(node, ancestors):
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec" and marker in str(
+            node.relation().location().rootPaths().toString()
+        ):
+            path = [name]
+            for a in reversed(ancestors):
+                path.append(a)
+                if "Join" in a:
+                    break
+            out.append(path)
+            return
+        for k in kids(node):
+            walk(k, ancestors + [name])
+
+    walk(plan, [])
+    return out
+
+
+def test_components_incremental_semi_reduce_mode_equivalent(spark, tmp_path):
     """semi_reduce_base=True (the streaming per-batch shape: base map
     semi-reduced to increment-touched ids via broadcast, increment-sized
     relabeling broadcast) must return the SAME rows as the default for
     both variants, and its plan must probe the base map with broadcast
-    joins only — never a shuffle of the base side."""
+    joins only — never a shuffle of the base side: every base-map scan
+    feeds a BroadcastHashJoin as its streamed side (no exchange between
+    scan and join), never a SortMergeJoin or ShuffledHashJoin.  Size-
+    based broadcasting is off, so only the mode's own hints can make a
+    join a broadcast (the default mode shuffles the base side)."""
     from ros_sql_spark.operators.dedup import (
         connected_components,
         connected_components_incremental,
@@ -869,31 +911,56 @@ def test_components_incremental_semi_reduce_mode_equivalent(spark):
     base_nodes = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 20, 21, 30, 31, 40)], "id long"
     )
-    base = connected_components(base_edges, nodes=base_nodes)
+    # the base map as a parquet scan, so its leaves are identifiable
+    # in the executed plan by path
+    base_path = str(tmp_path / "base_map")
+    connected_components(base_edges, nodes=base_nodes).write.parquet(
+        base_path
+    )
+    base = spark.read.parquet(base_path)
     inc_edges = spark.createDataFrame(
         [(3, 10), (21, 50), (50, 51), (51, 30), (60, 61)],
         "id_a long, id_b long",
     )
     new_nodes = spark.createDataFrame([(70,)], "id long")
 
-    for fn in (
-        connected_components_incremental,
-        connected_components_incremental_delta,
-    ):
-        plain = {
-            (r.id, r.component)
-            for r in fn(inc_edges, base, new_nodes=new_nodes).collect()
-        }
-        reduced_df = fn(
-            inc_edges, base, new_nodes=new_nodes, semi_reduce_base=True
-        )
-        reduced = {(r.id, r.component) for r in reduced_df.collect()}
-        assert reduced == plain, fn.__name__
-        p = reduced_df._jdf.queryExecution().executedPlan().toString()
-        # the base-map lookups ride broadcasts in this mode (the
-        # components loop inside the contraction may still shuffle —
-        # that's the increment-sized subgraph, not the base map)
-        assert "BroadcastHashJoin" in p, p
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for fn in (
+            connected_components_incremental,
+            connected_components_incremental_delta,
+        ):
+            plain_df = fn(inc_edges, base, new_nodes=new_nodes)
+            plain = {(r.id, r.component) for r in plain_df.collect()}
+            reduced_df = fn(
+                inc_edges, base, new_nodes=new_nodes, semi_reduce_base=True
+            )
+            reduced = {(r.id, r.component) for r in reduced_df.collect()}
+            assert reduced == plain, fn.__name__
+            # (the components loop inside the contraction may still
+            # shuffle — that's the increment-sized subgraph, not the
+            # base map)
+            paths = _base_scan_join_paths(
+                reduced_df._jdf.queryExecution().executedPlan(), "base_map"
+            )
+            assert paths, fn.__name__
+            for path in paths:
+                assert path[-1] == "BroadcastHashJoinExec", (fn.__name__, path)
+                assert not any(
+                    "Exchange" in n or "QueryStage" in n for n in path
+                ), (fn.__name__, path)
+            # the check discriminates: the default mode shuffles the
+            # base side into a sort-merge join
+            plain_paths = _base_scan_join_paths(
+                plain_df._jdf.queryExecution().executedPlan(), "base_map"
+            )
+            assert any(
+                p[-1] in ("SortMergeJoinExec", "ShuffledHashJoinExec")
+                for p in plain_paths
+            ), (fn.__name__, plain_paths)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 
 
 def test_components_incremental_on_corpus_pairs(spark):
@@ -1050,10 +1117,9 @@ def test_star_components_keep_self_loop_only_nodes(spark):
 
 
 def test_star_components_strategies_and_finisher_agree(spark):
-    """Round-14 contract: the four physical paths through
+    """Round-14 contract: the three physical paths through
     connected_components_star — small-graph union-find finisher
-    (default thresholds), forced star loop in both strategies
-    (join/window), and a MID-LOOP handoff (threshold between the
+    (default thresholds), forced star loop, and a MID-LOOP handoff (threshold between the
     initial and contracted edge counts) — all produce identical
     labels, equal to the propagation operator.  Random graph + a long
     chain (star's specialty regime; propagation is the oracle only on
@@ -1076,8 +1142,7 @@ def test_star_components_strategies_and_finisher_agree(spark):
     }
     for kw in (
         {},  # finisher path (800 canonical edges << default threshold)
-        {"small_graph_edges": 0, "strategy": "join"},
-        {"small_graph_edges": 0, "strategy": "window"},
+        {"small_graph_edges": 0},  # full star loop
     ):
         got = {
             (r.id, r.component)

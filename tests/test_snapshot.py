@@ -1670,3 +1670,156 @@ def test_changes_vacuumed_version_named_error(spark, tmp_path):
         snapshot_changes(spark, t, 1, 3)
     with pytest.raises(FileNotFoundError, match="retained versions"):
         snapshot_changes(spark, t, 3, 99)
+
+
+def _sketch_events(spark, lo):
+    return spark.createDataFrame(
+        [("g", i % 7, i) for i in range(lo, lo + 40)],
+        "s string, v int, key int",
+    )
+
+
+def _staged_commit(spark, t, batch_id):
+    """One pyarrow-written part file through the pure-Python staged
+    commit (the DataSource stream sink's path)."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from ros_sql_spark.sources.snapshot import snapshot_commit_staged_files
+
+    d = f"{t}-stage"
+    os.makedirs(d, exist_ok=True)
+    p = os.path.join(d, f"part-{uuid.uuid4().hex[:8]}.parquet")
+    papq.write_table(
+        pa.table({"id": pa.array([batch_id], pa.int64())}), p
+    )
+    schema_json = spark.createDataFrame([], "id bigint").schema.json()
+    return snapshot_commit_staged_files(t, [p], schema_json, batch_id)
+
+
+def _pre_state_guarded_append(spark, t, batch_id):
+    """The multi-table sink pattern: commit only when the pre-state
+    reader says the batch has not landed yet."""
+    from ros_sql_spark.sources.snapshot import (
+        snapshot_append_batch,
+        snapshot_pre_state,
+    )
+
+    if snapshot_pre_state(spark, t, batch_id)[1]:
+        return False
+    return snapshot_append_batch(_df(spark, batch_id, batch_id + 5, "a"), t,
+                                 batch_id)
+
+
+def _batch_sinks():
+    from ros_sql_spark.sources.snapshot import (
+        snapshot_append_batch,
+        snapshot_merge_batch,
+    )
+    from ros_sql_spark.streaming import sketch as sk
+
+    return {
+        "append_batch": lambda sp, t, b: snapshot_append_batch(
+            _df(sp, b, b + 5, "a"), t, b
+        ),
+        "merge_batch": lambda sp, t, b: snapshot_merge_batch(
+            _df(sp, 0, 5, f"b{b}"), t, ["id"], b
+        ),
+        "commit_staged_files": _staged_commit,
+        "fold_kmv": lambda sp, t, b: sk.kmv_sketch_batch(
+            _sketch_events(sp, b), b, t, "s", "key", 16
+        ),
+        "fold_cm": lambda sp, t, b: sk.cm_build_batch(
+            _sketch_events(sp, b), b, t, "key", 2, 16
+        ),
+        "fold_quantile": lambda sp, t, b: sk.quantile_sketch_batch(
+            _sketch_events(sp, b), b, t, "s", "v", "key", 16
+        ),
+        "fold_topk": lambda sp, t, b: sk.topk_sketch_batch(
+            _sketch_events(sp, b), b, t, "s", "v", 4
+        ),
+        "pre_state": _pre_state_guarded_append,
+    }
+
+
+@pytest.mark.parametrize("head_shape", ["last_batch", "tag_only"])
+@pytest.mark.parametrize("sink", list(_batch_sinks()))
+def test_every_batch_sink_skips_covered_replay(spark, tmp_path, sink,
+                                               head_shape):
+    """Every exactly-once sink reads the watermark through the one
+    committed-batch reader: a stale replay (batch 8) is skipped on a head
+    whose ``last_batch`` covers it AND on a head that carries only a
+    ``batch:9`` tag (manifests from before ``last_batch`` existed) —
+    no commit, no new version.  A newer batch still commits."""
+    from ros_sql_spark.sources.snapshot import (
+        _publish_manifest,
+        _read_manifest,
+    )
+
+    run = _batch_sinks()[sink]
+    t = str(tmp_path / "tbl")
+    assert run(spark, t, 0)  # creates the table
+    v = snapshot_versions(spark, t)[-1]
+    head = dict(_read_manifest(spark, t, v), version=v + 1)
+    if head_shape == "last_batch":
+        head["last_batch"] = 9
+        head.pop("tag", None)
+    else:
+        head["tag"] = "batch:9"
+        head.pop("last_batch", None)
+    _publish_manifest(spark, t, v + 1, head)
+
+    assert not run(spark, t, 8), (sink, head_shape)
+    assert not run(spark, t, 9), (sink, head_shape)
+    assert snapshot_versions(spark, t)[-1] == v + 1
+    assert run(spark, t, 10), (sink, head_shape)
+    m = _read_manifest(spark, t, snapshot_versions(spark, t)[-1])
+    assert m["last_batch"] == 10, m
+
+
+def test_batch_watermark_has_one_owner():
+    """The batch watermark has ONE owner, sources/snapshot.py: no other
+    product module names the manifest's ``"last_batch"`` key or parses
+    a ``batch:<id>`` tag (writing one with an f-string is fine), and no
+    streaming module imports a private snapshot name."""
+    import ast
+    import pathlib
+
+    import ros_sql_spark
+
+    root = pathlib.Path(ros_sql_spark.__file__).parent
+    owner = root / "sources" / "snapshot.py"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        tree = ast.parse(path.read_text())
+        fstring_parts = {
+            id(v)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.JoinedStr)
+            for v in n.values
+        }
+        rel = path.relative_to(root)
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and id(n) not in fstring_parts
+                and (n.value == "last_batch" or n.value.startswith("batch:"))
+            ):
+                bad.append(f"{rel}:{n.lineno}: {n.value!r}")
+            if (
+                isinstance(n, ast.ImportFrom)
+                and n.module == "ros_sql_spark.sources.snapshot"
+                and rel.parts[0] == "streaming"
+            ):
+                bad += [
+                    f"{rel}:{n.lineno}: imports {a.name}"
+                    for a in n.names
+                    if a.name.startswith("_")
+                ]
+    assert not bad, bad

@@ -327,6 +327,7 @@ def test_sketch_batch_occ_guard(spark, tmp_path, monkeypatch):
     read-merge-overwrite commit pins the version it read."""
     import pytest
 
+    import ros_sql_spark.sources.snapshot as snap
     import ros_sql_spark.streaming.sketch as ss
     from ros_sql_spark.sources.snapshot import SnapshotConflict
 
@@ -338,8 +339,9 @@ def test_sketch_batch_occ_guard(spark, tmp_path, monkeypatch):
     assert ss.kmv_sketch_batch(df, 0, kmv_t, "s", "v", 16)
     assert ss.cm_build_batch(df, 0, cm_t, "v", 2, 16)
     # simulate a stale read: the other writer committed version 1 after
-    # this writer listed versions (here: force the empty-table branch)
-    monkeypatch.setattr(ss, "_list_versions", lambda sp, t: [])
+    # this writer looked up the head (here: force the empty-table
+    # branch of the fold sink's version lookup)
+    monkeypatch.setattr(snap, "_head", lambda sp, t: (0, {}))
     with pytest.raises(SnapshotConflict):
         ss.kmv_sketch_batch(df, 1, kmv_t, "s", "v", 16)
     with pytest.raises(SnapshotConflict):
