@@ -19,6 +19,11 @@ Spark-first re-expression:
   + array_sort + transform — replacing the reference's O(rows × backrefs)
   per-row SELECT round-trips (SURVEY.md §4.1) with set-at-a-time joins.
   Reassembly order comes from the STORED index, never storage order.
+- Stores: the file stores (``api.record``, ``record_stream``,
+  ``record_stream_snapshot``) keep messages nested, because Parquet
+  already shreds nested records into columns; this module serves the
+  JDBC recorder, which writes the flat tables, and ``api.tables``, which
+  derives them as lazy views over a stored topic.
 
 Scale notes (100 TB):
 - Surrogate keys are the caller's natural/record keys (``keys``), not

@@ -24,7 +24,9 @@ from pyspark.sql import types as T
 
 __all__ = ["SCHEMA_VERSION", "TopicEntry", "EngineCatalog", "namify"]
 
-SCHEMA_VERSION = 1
+# 2: file stores hold one nested table per topic (1 held the flat
+# normalized tables, which a version-2 reader would misread)
+SCHEMA_VERSION = 2
 
 _MANGLE_RE = re.compile(r"[^A-Za-z0-9_]")
 

@@ -4,9 +4,9 @@
 The reference subscribes N ROS topics at once and lands each message in
 that topic's normalized tables.  Here the live bus is a multiplexed
 streaming DataFrame carrying a topic column; each micro-batch is
-demultiplexed, shredded with operators.normalize, and appended to the
-same on-disk store layout that ``api.playback`` reads — so record →
-store → ordered replay is one continuous, catalog-described pipeline:
+demultiplexed and each topic's messages appended, still nested, to the
+one table per topic that ``api.playback`` reads — so record → store →
+ordered replay is one continuous, catalog-described pipeline:
 
     cat = declare_topics(store, {"click": schema, ...}, ["event_id"])
     q = record_stream(stream, "event_type", store, ["event_id"], ck)
@@ -18,16 +18,19 @@ idempotent re-declare) — a topic arriving in the stream without a
 catalog entry is an error surfaced at declare time, not silent schema
 drift at write time.
 
-Scale notes: every recorder commits a micro-batch as one Spark job per
-(topic, normalized table) over one cached batch — 6 tables per topic for
-a message with two nested levels and two arrays.  Those commits are
-independent, so ``_commit_concurrently`` runs them side by side, at most
-``defaultParallelism`` at a time: on small batches (the streaming norm)
-each job is mostly fixed driver cost (~0.3 s), which now overlaps across
-tables instead of adding up; a table whose job already fills the cluster
-just queues its tasks behind the others on the FIFO scheduler.  The
-batch stays the unit of commit: the body returns only after every table
-commit has finished, and fails if any of them failed.
+Scale notes: a micro-batch costs the topic probe (a distinct over the
+cached batch) plus one commit job per topic — 5 jobs for a 3-topic batch.
+The file stores write each topic's frame once as nested parquet (Parquet
+shreds nested records into columns itself); only the JDBC sink shreds
+with operators.normalize, one commit per (topic, normalized table) — 6
+tables per topic for a message with two nested levels and two arrays.
+Commits are independent, so ``_commit_concurrently`` runs them side by
+side, at most ``defaultParallelism`` at a time: on small batches (the
+streaming norm) each job is mostly fixed driver cost (~0.3 s), which
+overlaps across commits instead of adding up; a commit whose job already
+fills the cluster just queues its tasks behind the others on the FIFO
+scheduler.  The batch stays the unit of commit: the body returns only
+after every commit has finished, and fails if any of them failed.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
-from ros_sql_spark.api import CATALOG_FILE, _meta_to_dict
+from ros_sql_spark.api import CATALOG_FILE, _meta_to_dict, _topic_path
 from ros_sql_spark.operators.normalize import normalize
 from ros_sql_spark.sources.catalog import EngineCatalog, namify
 
@@ -62,8 +65,9 @@ def declare_topics(
     """R1/R15: declare every topic's schema before any message lands.
 
     The backref ledger is derived by dry-running the shred planner on an
-    empty frame of the declared schema, so playback can reassemble
-    without ever having seen data.
+    empty frame of the declared schema: it describes the flat tables the
+    JDBC sink writes and ``api.tables`` derives, and it is part of the
+    identical re-declare check.
     """
     from ros_sql_spark.session import get_spark
 
@@ -98,8 +102,8 @@ def record_stream(
     dedup_watermark: str = "1 hour",
     dedup_ts_col: str = "ts",
 ):
-    """R12/R7 twins: demux a multiplexed stream into per-topic normalized
-    stores, micro-batch-at-a-time.
+    """R12/R7 twins: demux a multiplexed stream into one nested parquet
+    table per topic, micro-batch-at-a-time.
 
     Topic values in ``topic_col`` must match declared topic names
     (declare_topics).  Undeclared values fail the batch loudly — the
@@ -117,10 +121,12 @@ def record_stream(
     streaming checkpoint advancing re-appends the whole micro-batch on
     restart (dropDuplicatesWithinWatermark's state also rolls back to
     the checkpoint, so it re-emits the same rows rather than filtering
-    them).  That trade buys this recorder its throughput; when crash
-    replay must be exactly-once use ``record_stream_snapshot``
-    (batch-watermarked atomic manifests) or ``record_stream_jdbc``
-    (key anti-join per batch) — the two sink variants that exist for
+    them).  A redelivered batch therefore replays as whole duplicate
+    messages, never merged ones, so a dedup of the replay on the topic
+    keys removes them.  That trade buys this recorder its throughput;
+    when crash replay must be exactly-once use ``record_stream_snapshot``
+    (batch-watermarked atomic manifests) or ``record_stream_jdbc`` (key
+    anti-join per batch) — the two sink variants that exist for
     precisely this reason.
     """
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
@@ -131,11 +137,11 @@ def record_stream(
             stream, list(dedup_keys), watermark=dedup_watermark, ts_col=dedup_ts_col
         )
 
-    def commit(topic: str, name: str, tbl: DataFrame, batch_id: int) -> None:
-        base = os.path.join(store_path, namify(topic))
-        tbl.write.mode("append").parquet(os.path.join(base, name))
+    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+        path = _topic_path(store_path, topic)
+        return [lambda: frame.write.mode("append").parquet(path)]
 
-    return _start(stream, topic_col, catalog, commit, checkpoint_path, available_now)
+    return _start(stream, topic_col, catalog, commits, checkpoint_path, available_now)
 
 
 def record_stream_snapshot(
@@ -145,14 +151,14 @@ def record_stream_snapshot(
     checkpoint_path: str,
     available_now: bool = True,
 ):
-    """The recorder landing every normalized table in a SNAPSHOT table
+    """The recorder landing each topic's nested table in a SNAPSHOT table
     (sources/snapshot.py) instead of a bare parquet directory: each
-    micro-batch's tables become visible ATOMICALLY (readers see a whole
+    micro-batch's messages become visible ATOMICALLY (readers see a whole
     batch or none of it — the bare-parquet recorder exposes files as
     the committer moves them), redelivered batches are skipped by the
-    per-table ``batch:<id>`` manifest tag (exactly-once without key
-    anti-joins), and replayers can time-travel the store to any batch
-    boundary.  Layout: ``store_path/<topic>/<table>`` snapshot tables;
+    per-table batch watermark (exactly-once without key anti-joins),
+    and replayers can time-travel the store to any batch boundary.
+    Layout: one ``store_path/<table>/<table>`` snapshot table per topic;
     read with ``snapshot_read``; same declare-before-write catalog
     contract as record_stream.
     """
@@ -160,22 +166,22 @@ def record_stream_snapshot(
 
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
 
-    def commit(topic: str, name: str, tbl: DataFrame, batch_id: int) -> None:
-        table = os.path.join(store_path, namify(topic), name)
+    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+        table = _topic_path(store_path, topic)
         # time-series data skipping: record per-file min/max of the
         # topic's timestamp (and its key) in each commit's manifest, so
         # time-range replays prune whole files — streaming appends are
         # naturally time-clustered, which is exactly when manifest stats
         # pay off (each batch's file covers one narrow ts window).
-        entry = catalog.topics.get(topic)
-        stats = [
-            c
-            for c in ((entry.ts_col,) + tuple(entry.key_cols) if entry else ())
-            if c and c in tbl.columns
+        entry = catalog.topics[topic]
+        stats = [c for c in (entry.ts_col, *entry.key_cols) if c in frame.columns]
+        return [
+            lambda: snapshot_append_batch(
+                frame, table, batch_id, stats_cols=stats or None
+            )
         ]
-        snapshot_append_batch(tbl, table, batch_id, stats_cols=stats or None)
 
-    return _start(stream, topic_col, catalog, commit, checkpoint_path, available_now)
+    return _start(stream, topic_col, catalog, commits, checkpoint_path, available_now)
 
 
 def record_stream_jdbc(
@@ -213,20 +219,29 @@ def record_stream_jdbc(
 
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
 
-    def commit(topic: str, name: str, tbl: DataFrame, batch_id: int) -> None:
-        root_keys = set(catalog.topics[topic].key_cols)
-        tkeys = [c for c in tbl.columns if c in root_keys or c.startswith("_idx__")]
-        jdbc_idempotent_batch(
-            tbl, batch_id, url, table_prefix + name, tkeys, driver=driver
-        )
+    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+        keys = list(catalog.topics[topic].key_cols)
+        norm = normalize(frame, keys, table=namify(topic))
+        return [
+            functools.partial(
+                jdbc_idempotent_batch,
+                tbl,
+                batch_id,
+                url,
+                table_prefix + name,
+                [c for c in tbl.columns if c in keys or c.startswith("_idx__")],
+                driver=driver,
+            )
+            for name, tbl in norm.tables.items()
+        ]
 
-    return _start(stream, topic_col, catalog, commit, checkpoint_path, available_now)
+    return _start(stream, topic_col, catalog, commits, checkpoint_path, available_now)
 
 
-def _demux_normalized(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
-    """Yield (topic, table_name, table_df) for every normalized table of
-    every topic present in the micro-batch, enforcing the R1/R15
-    declare-before-write and schema-stability guards."""
+def _demux(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
+    """Yield (topic, frame) for every topic present in the micro-batch,
+    enforcing the R1/R15 declare-before-write and schema-stability
+    guards."""
     declared = set(catalog.topics)
     seen = {r[0] for r in batch.select(topic_col).distinct().collect()}
     unknown = seen - declared
@@ -249,11 +264,7 @@ def _demux_normalized(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
                 f"{sub.schema.simpleString()} != declared "
                 f"{declared_schema.simpleString()} (R15 guard)"
             )
-        norm = normalize(
-            sub, list(catalog.topics[topic].key_cols), table=namify(topic)
-        )
-        for name, tbl in norm.tables.items():
-            yield topic, name, tbl
+        yield topic, sub
 
 
 def _commit_concurrently(spark, commits: list) -> None:
@@ -281,22 +292,24 @@ def _start(
     stream: DataFrame,
     topic_col: str,
     catalog: EngineCatalog,
-    commit,
+    commits,
     checkpoint_path: str,
     available_now: bool,
 ):
     """Start ``stream`` through the recorders' shared foreachBatch body:
-    cache the batch, demux and shred it, commit every table concurrently."""
+    cache the batch, demux it, and run every commit thunk the sink's
+    ``commits(topic, frame, batch_id)`` returns concurrently."""
     from ros_sql_spark.streaming.util import start_foreach_batch
 
     def body(batch: DataFrame, batch_id: int) -> None:
         batch = batch.cache()
         try:
-            commits = [
-                functools.partial(commit, topic, name, tbl, batch_id)
-                for topic, name, tbl in _demux_normalized(batch, topic_col, catalog)
+            thunks = [
+                c
+                for topic, frame in _demux(batch, topic_col, catalog)
+                for c in commits(topic, frame, batch_id)
             ]
-            _commit_concurrently(batch.sparkSession, commits)
+            _commit_concurrently(batch.sparkSession, thunks)
         finally:
             batch.unpersist()
 

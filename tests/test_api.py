@@ -41,20 +41,53 @@ def test_playback_time_range(spark, tmp_path):
 
 
 def test_record_playback_nested_topic(spark, tmp_path):
-    """Array-of-struct topic roundtrips through the on-disk store,
-    including the serialized backref ledger."""
+    """Array-of-struct topic roundtrips through the on-disk store, which
+    holds one nested table per topic; the relational child tables stay
+    available as views equal to normalize's."""
+    from ros_sql_spark.api import tables
+    from ros_sql_spark.operators.normalize import normalize
+
     store = str(tmp_path / "store")
     df = spark.createDataFrame(_f3_rows(60), F3_SCHEMA)
     record(spark, {"/viz/marker": df}, store, key_cols=["topic", "seq"], ts_col=None)
-    # normalized layout on disk: root + one table per array field
+    # nested layout on disk: one table directory per topic
     base = os.path.join(store, "viz__marker")
-    assert {"viz__marker", "viz__marker__points", "viz__marker__colors"} <= set(
-        os.listdir(base)
-    )
+    assert os.listdir(base) == ["viz__marker"]
     back = playback(spark, store, "/viz/marker")
     left = sorted(map(repr, (r.asDict(recursive=True) for r in df.collect())))
     right = sorted(map(repr, (r.asDict(recursive=True) for r in back.collect())))
     assert left == right
+
+    def hashed(t):
+        return sorted(
+            r[0] for r in t.select(F.hash(*t.columns).alias("h")).collect()
+        )
+
+    views = tables(spark, store, "/viz/marker")
+    expect = normalize(df, ["topic", "seq"], table="viz__marker").tables
+    assert {"viz__marker", "viz__marker__points", "viz__marker__colors"} <= set(views)
+    assert set(views) == set(expect)
+    for name, t in expect.items():
+        assert views[name].columns == t.columns, name
+        assert hashed(views[name]) == hashed(t), name
+
+
+def test_playback_rejects_flat_layout_catalog(spark, tmp_path):
+    """A store whose catalog says version 1 holds the flat normalized
+    tables; playback must refuse it rather than misread it."""
+    import json
+
+    store = str(tmp_path / "store")
+    ev = load_table(spark, SF_SMALL, "events")
+    record(spark, {"/events": ev}, store, key_cols=["event_id"], ts_col="ts_ns")
+    cat_path = os.path.join(store, CATALOG_FILE)
+    with open(cat_path) as fh:
+        doc = json.load(fh)
+    doc["version"] = 1
+    with open(cat_path, "w") as fh:
+        json.dump(doc, fh)
+    with pytest.raises(ValueError, match="catalog schema version 1 is not supported"):
+        playback(spark, store, "/events")
 
 
 def test_playback_missing_store_dir_raises(spark, tmp_path):

@@ -1,16 +1,18 @@
 """Property-based roundtrip tests (hypothesis): arbitrary nested rows —
 including adversarial values hypothesis finds (empty strings, extreme
 ints, NaN-free floats, empty/None arrays, zero-length blobs) — must
-survive normalize→denormalize exactly.  Complements the fixed F1–F3
-fixtures with generated shapes."""
+survive normalize→denormalize and record→playback exactly.
+Complements the fixed F1–F3 fixtures with generated shapes."""
 
 from __future__ import annotations
+import uuid
+
 import pytest
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import types as T
 
-from ros_sql_spark.api import paced_replay
+from ros_sql_spark.api import paced_replay, playback, record
 from ros_sql_spark.operators.normalize import denormalize, normalize
 from ros_sql_spark.sources.io import load_table
 from tests.conftest import SF_SMALL, prop_examples
@@ -57,7 +59,7 @@ row = st.tuples(
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(rows=st.lists(row, min_size=1, max_size=25))
-def test_generated_rows_roundtrip(spark, rows):
+def test_generated_rows_roundtrip(spark, tmp_path, rows):
     rows = [(i, *r[1:]) for i, r in enumerate(rows)]  # unique pk
     df = spark.createDataFrame(rows, SCHEMA)
     rebuilt = denormalize(normalize(df, ["pk"]))
@@ -65,6 +67,11 @@ def test_generated_rows_roundtrip(spark, rows):
     right = sorted(map(repr, (r.asDict(recursive=True) for r in rebuilt.collect())))
     assert left == right
     assert rebuilt.schema == df.schema
+    # the same rows through the on-disk store: record → playback
+    store = str(tmp_path / uuid.uuid4().hex)
+    record(spark, {"/gen": df}, store, key_cols=["pk"], ts_col=None)
+    replayed = playback(spark, store, "/gen").collect()
+    assert sorted(map(repr, (r.asDict(recursive=True) for r in replayed))) == left
 
 
 def test_paced_replay_delays_match_timestamps(spark):
