@@ -14,7 +14,7 @@ ns epochs beyond double's 53-bit mantissa.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 import pyspark.sql.functions as F
 
 __all__ = [
@@ -23,7 +23,6 @@ __all__ = [
     "ns_to_timestamp",
     "ns_remainder_us",
     "timestamp_to_ns",
-    "with_time_split",
 ]
 
 NS_PER_SEC = 1_000_000_000
@@ -76,11 +75,4 @@ def timestamp_to_ns(ts_col: Column | str, rem_col: Column | str | None = None) -
     if rem_col is not None:
         ns = ns + _c(rem_col).cast("bigint")
     return ns
-
-
-def with_time_split(df: DataFrame, ns_col: str, prefix: str | None = None) -> DataFrame:
-    """Add reference-shaped ``<prefix>_secs``/``<prefix>_nsecs`` columns."""
-    p = prefix or ns_col
-    secs, nsecs = split_ns(ns_col)
-    return df.withColumn(f"{p}_secs", secs).withColumn(f"{p}_nsecs", nsecs)
 

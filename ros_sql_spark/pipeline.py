@@ -700,8 +700,7 @@ def publish_curated(
     """Land a curation run in a snapshot table — the pipeline's
     production exit: readers see the whole curated corpus or none of it
     (atomic manifest publish), every run stays readable as a version
-    (time travel across curation recipes; ``snapshot_changes`` diffs
-    two runs), and per-file ``id_col`` min/max stats make downstream
+    (time travel across curation recipes), and per-file ``id_col`` min/max stats make downstream
     id-range reads and :func:`~ros_sql_spark.sources.snapshot.snapshot_merge`
     upserts file-prunable.
 

@@ -104,8 +104,8 @@ def jdbc_idempotent_batch(
     driver: str | None = None,
 ) -> None:
     """foreachBatch body: append only rows whose keys are absent in the
-    target table (exactly-once over at-least-once redelivery — the JDBC
-    variant of streaming/replay.idempotent_sink_batch)."""
+    target table (exactly-once over at-least-once redelivery: a
+    redelivered batch finds all its keys present and appends nothing)."""
     spark = batch_df.sparkSession
     fresh = batch_df.dropDuplicates(key_cols)
     try:

@@ -503,7 +503,7 @@ class _SnapshotBatchWriter(_StagedWriteMixin, DataSourceArrowWriter):
 class _SnapshotStreamWriter(_StagedWriteMixin, DataSourceStreamArrowWriter):
     """``writeStream.format("rosql_snapshot")`` — the open-API
     exactly-once streaming sink over snapshot tables (the in-engine
-    twin is ``snapshot_write_stream``'s foreachBatch).  Two-phase like
+    twin is ``snapshot_append_batch`` in a foreachBatch).  Two-phase like
     every snapshot commit: executors write Arrow batches straight to
     parquet in a PRE-COMMIT staging area outside ``{table}/data``
     (vacuum never scans there, so in-flight files are safe without any
@@ -541,7 +541,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
     stream of an APPEND-ONLY snapshot table: offsets are manifest
     version numbers, each micro-batch reads exactly the files the new
     versions added (manifest set difference, one input partition per
-    new file — the in-engine twin is ``snapshot_read_incremental``).
+    new file).
     Non-append history (overwrite / DML / compaction rewrites) is a
     hard error, not silent double-reads: a version whose file set
     drops files cannot be expressed as an append delta.  Offsets are

@@ -45,8 +45,7 @@ forward unchanged); a replayed batch whose id the head's watermark
 already covers is skipped.  The rule lives HERE and nowhere else:
 :func:`_next_manifest` is the only constructor of a manifest record,
 :func:`_committed_batch` the only reader of its watermark, and the
-batch sinks (:func:`snapshot_append_batch`,
-:func:`snapshot_merge_batch`, :func:`snapshot_fold_batch`,
+batch sinks (:func:`snapshot_append_batch`, :func:`snapshot_fold_batch`,
 :func:`snapshot_commit_staged_files`) and the multi-table crash-recovery
 reader (:func:`snapshot_pre_state`) all go through them.
 
@@ -74,18 +73,9 @@ __all__ = [
     "snapshot_vacuum",
     "snapshot_append_batch",
     "snapshot_compact",
-    "snapshot_write_stream",
     "snapshot_commit_staged_files",
     "snapshot_merge",
     "snapshot_delete",
-    "snapshot_delete_keys",
-    "snapshot_update",
-    "snapshot_merge_batch",
-    "snapshot_merge_stream",
-    "snapshot_changes",
-    "snapshot_read_incremental",
-    "snapshot_history",
-    "snapshot_restore",
     "snapshot_fold_batch",
     "snapshot_pre_state",
     "snapshot_watermark",
@@ -476,12 +466,10 @@ def snapshot_commit(
     table: str,
     *,
     mode: str = "overwrite",
-    replace_where: str | None = None,
     expected_version: int | None = None,
     tag: str | None = None,
     stats_cols: list[str] | None = None,
     carry_files: list[str] | None = None,
-    evolve_schema: bool = False,
     meta: dict | None = None,
 ) -> int:
     """Publish ``df`` as the next snapshot of ``table``; returns the new
@@ -493,9 +481,6 @@ def snapshot_commit(
       files CARRIED BY REFERENCE plus ``df``'s new files — a
       metadata-only append (no old data moves), the shape a streaming
       sink commits every micro-batch;
-    - ``replace_where``: SQL predicate — the new snapshot is (previous
-      snapshot WHERE NOT predicate) ∪ df.  Mirrors partition
-      replacement (rollup upserts, compaction) with reader isolation.
     - ``expected_version``: optimistic-concurrency guard — fail with
       :class:`SnapshotConflict` if the table moved past it.
     - ``tag``: opaque marker recorded in the manifest (e.g. a streaming
@@ -510,16 +495,6 @@ def snapshot_commit(
       Iceberg/Delta-style data skipping.  Appends carry the previous
       files' stats forward unchanged; once a table commits with
       stats_cols, later appends default to the same columns.
-    - ``evolve_schema``: allow PURELY ADDITIVE schema evolution — ``df``
-      may introduce NEW columns (any position; reads are name-based),
-      but every existing column must keep its exact type and none may
-      be dropped.  The manifest records the widened schema, and because
-      every read applies the MANIFEST schema (not per-file footers),
-      carried/older files simply surface NULL for columns they predate
-      — the Delta ``mergeSchema`` additive subset, with no file
-      rewrites.  Type changes and drops stay hard errors: the
-      vectorized parquet reader cannot reconcile physically different
-      encodings, and silent column loss is never evolution.
     - ``meta``: an opaque JSON dict pinned to this snapshot and CARRIED
       FORWARD by every later commit that does not replace it (appends,
       batch appends, compactions, DML — same discipline as
@@ -535,12 +510,10 @@ def snapshot_commit(
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode={mode!r}")
-    if mode == "append" and replace_where is not None:
-        raise ValueError("append and replace_where are mutually exclusive")
-    if carry_files is not None and (mode == "append" or replace_where):
+    if carry_files is not None and mode == "append":
         raise ValueError(
-            "carry_files composes only with plain overwrite (it IS the "
-            "explicit carried-set form that append/replace_where derive)"
+            "carry_files composes only with overwrite (it IS the explicit "
+            "carried-set form that append derives)"
         )
     spark = df.sparkSession
     versions = _list_versions(spark, table)
@@ -572,19 +545,12 @@ def snapshot_commit(
             changed = [
                 n for n in prev_f if n in cur_f and cur_f[n] != prev_f[n]
             ]
-            additive = not missing and not changed
-            if not (evolve_schema and additive):
-                hint = (
-                    " (the change is purely additive — pass "
-                    "evolve_schema=True to widen the table schema)"
-                    if additive
-                    else f" (dropped: {missing}, retyped: {changed})"
-                )
-                raise ValueError(
-                    f"schema mismatch vs snapshot v{latest} at {table}: "
-                    f"{df.schema.simpleString()} vs {prev.simpleString()} — "
-                    "snapshot tables evolve only additively" + hint
-                )
+            added = [n for n in cur_f if n not in prev_f]
+            raise ValueError(
+                f"schema mismatch vs snapshot v{latest} at {table}: "
+                f"{df.schema.simpleString()} vs {prev.simpleString()} "
+                f"(dropped: {missing}, retyped: {changed}, added: {added})"
+            )
 
     carried: list[str] = []
     if mode == "append" and versions:
@@ -606,19 +572,6 @@ def snapshot_commit(
     # unreferenced garbage for the next vacuum, never silent extra rows
     # in the winner's snapshot).
     staging = f"{table}/data/v{new_version:05d}-{uuid.uuid4().hex[:8]}"
-    if replace_where is not None and versions:
-        # partition/predicate replacement: the complement of the
-        # predicate is rewritten into the new version directory.
-        # (Carrying untouched files by reference needs per-file column
-        # stats to prove they hold no matching rows — Iceberg's
-        # manifest metrics; without them, rewriting the complement is
-        # the honest minimal form.  Readers of the previous snapshot
-        # are unaffected either way — that is the point.)
-        kept = snapshot_read(spark, table, version=latest).filter(
-            f"NOT ({replace_where})"
-        )
-        kept.write.mode("append").parquet(staging)
-
     df.write.mode("append").parquet(staging)
     # data-skipping stats: sticky per table (appends inherit the stats
     # columns of the snapshot they extend), carried files keep the
@@ -657,8 +610,8 @@ def snapshot_append_batch(
     ``batch:<id>`` unless the table's newest commit already carries this
     id or later (at-least-once redelivery → exactly-once table).
     Returns whether a commit happened.  The foreachBatch building block
-    behind :func:`snapshot_write_stream` — reusable by any sink that
-    lands multiple tables per batch (streaming/record.py's demux).
+    of ``streaming/record.py::record_stream_snapshot``, which lands one
+    table per topic per batch.
     ``meta`` replaces the carried cross-table binding when the commit
     lands (skipped replays leave the existing binding untouched — it
     was already correct when the batch first committed)."""
@@ -827,33 +780,6 @@ def snapshot_commit_staged_files(
     return True
 
 
-def snapshot_write_stream(
-    events: DataFrame,
-    table: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-):
-    """Exactly-once streaming append sink backed by the snapshot table.
-
-    Each micro-batch commits atomically: readers see the whole batch or
-    none of it (the plain-parquet foreachBatch sink in
-    streaming/replay.py can expose half-written batches between file
-    moves).  Exactly-once on top of at-least-once redelivery comes from
-    the manifest ``tag``: a batch commits with tag ``batch:<id>``; a
-    REPLAYED batch finds its id at-or-below the newest tagged commit
-    and skips — the transactional twin of the key-anti-join idempotent
-    sink, with no key columns needed.  (Single-writer per table, like
-    every Structured Streaming sink.)  Returns the StreamingQuery.
-    """
-
-    def body(df: DataFrame, batch_id: int) -> None:
-        snapshot_append_batch(df, table, batch_id)
-
-    from ros_sql_spark.streaming.util import start_foreach_batch
-
-    return start_foreach_batch(events, body, checkpoint_path, available_now)
-
-
 def snapshot_read(
     spark: SparkSession,
     table: str,
@@ -923,7 +849,6 @@ def snapshot_compact(
     table: str,
     target_files: int = 1,
     cluster_by: list[str] | None = None,
-    zorder_by: list[str] | None = None,
     meta: dict | None = None,
 ) -> int:
     """Rewrite the current snapshot's rows into ``target_files`` files
@@ -948,39 +873,14 @@ def snapshot_compact(
     (append-ordered files all span the full key range; clustered files
     prune to ~1/target_files per point lookup).  The Delta OPTIMIZE
     ZORDER role, in its linear single-/prefix-key form.
-
-    ``zorder_by``: Morton-interleave these (integer) columns instead —
-    file ranges stay tight in EVERY listed dimension, so range reads on
-    any one of them prune (linear ``cluster_by`` only prunes its
-    prefix).  See functions/zorder.py; mutually exclusive with
-    ``cluster_by``.
     """
-    if cluster_by and zorder_by:
-        raise ValueError("cluster_by and zorder_by are mutually exclusive")
     versions = _list_versions(spark, table)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {table}")
     latest = versions[-1]
     prev_tag = _read_manifest(spark, table, latest).get("tag")
     df = snapshot_read(spark, table, version=latest)
-    if zorder_by:
-        from ros_sql_spark.functions.zorder import zorder_bounds, zorder_key
-
-        bounds = zorder_bounds(df, zorder_by)
-        if all(lo is None for lo, _ in bounds.values()):
-            # empty snapshot: nothing to cluster — plain rewrite (an
-            # all-NULL column on a NON-empty table still raises inside
-            # zorder_key, which is a caller error worth surfacing)
-            df = df.coalesce(target_files)
-        else:
-            key = zorder_key(bounds)
-            df = (
-                df.withColumn("_zkey", key)
-                .repartitionByRange(target_files, "_zkey")
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-    elif cluster_by:
+    if cluster_by:
         from pyspark.sql import functions as SF
 
         cols = [SF.col(c) for c in cluster_by]
@@ -1000,7 +900,6 @@ def _key_candidates(
     df: DataFrame,
     manifest: dict,
     k0: str,
-    stats_prune: bool = True,
 ) -> tuple[list[str], list[str]]:
     """(rewrite candidates, carried) for a KEYED statement: candidacy is
     decided EXACTLY per file — the manifest-sized file-bounds table (one
@@ -1017,7 +916,7 @@ def _key_candidates(
         for f in files
         if k0 in stats.get(f, {})
     ]
-    if not (stats_prune and bounded):
+    if not bounded:
         return list(files), []
     fb = spark.createDataFrame(bounded, ["_file", "_lo", "_hi"])
     hit_rows = (
@@ -1037,75 +936,11 @@ def _key_candidates(
     return candidates, carried
 
 
-def snapshot_delete_keys(
-    keys_df: DataFrame,
-    table: str,
-    keys: list[str],
-    stats_prune: bool = True,
-    tag: str | None = None,
-) -> int:
-    """Keyed anti-DELETE: remove every row whose key tuple appears in
-    ``keys_df`` (``DELETE FROM t WHERE (k…) IN (SELECT … )``).  The
-    set-membership twin of :func:`snapshot_delete`'s predicate form and
-    the deletion half of :func:`snapshot_merge`: file candidacy is the
-    same exact per-file bounds join (a file rewrites only if some
-    doomed key lands in its recorded min/max range), so a keyed purge
-    against a key-clustered table touches ~the files the keys live in.
-    Null keys never equi-match (ANSI), so null-keyed rows survive.
-    If no file can hold a doomed key, returns the current version
-    without committing."""
-    spark = keys_df.sparkSession
-    versions = _list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    latest = versions[-1]
-    manifest = _read_manifest(spark, table, latest)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    # pin the doomed-key frame: its lineage is otherwise evaluated
-    # THREE times (empty probe, candidacy bounds join, anti-join) —
-    # triple cost for an expensive keys_df and, worse, a
-    # nondeterministic one could show the candidacy join a different
-    # key set than the anti-join and carry a file whose doomed key only
-    # materialized second (round-8 review).  Lazy localCheckpoint: the
-    # empty probe below is the materializing action.
-    keys_df = keys_df.select(*keys).distinct().localCheckpoint(eager=False)
-    # empty-keys short-circuit BEFORE candidacy: without it, files the
-    # stats cannot bound (non-JSON-native key types, unreadable
-    # footers) are "always candidates" and an empty purge — a retried
-    # expire, a cutoff nothing predates — would rewrite them and
-    # publish a spurious version on every call (the non-idempotent-
-    # expire bug class, statless-file edition).
-    if keys_df.limit(1).count() == 0:
-        return latest
-    candidates, carried = _key_candidates(
-        spark, keys_df, manifest, keys[0], stats_prune
-    )
-    if not candidates:
-        return latest
-    kept = (
-        spark.read.schema(schema)
-        .parquet(*candidates)
-        .join(keys_df, keys, "left_anti")
-    )
-    return snapshot_commit(
-        kept,
-        table,
-        mode="overwrite",
-        expected_version=latest,
-        tag=tag,
-        carry_files=carried or None,
-    )
-
-
 def snapshot_merge(
     df: DataFrame,
     table: str,
     keys: list[str],
-    stats_prune: bool = True,
     tag: str | None = None,
-    evolve_schema: bool = False,
     stats_cols: list[str] | None = None,
     meta: dict | None = None,
 ) -> int:
@@ -1155,31 +990,23 @@ def snapshot_merge(
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    # drop enforcement must not depend on file layout (round-8 review:
-    # with evolve_schema=True, a df missing an existing column errored
-    # only when key pruning found NO candidates; with candidates the
-    # union's allowMissingColumns re-filled it as NULL and committed
-    # silently).  allowMissingColumns exists for the OTHER direction —
-    # kept rows lacking columns df INTRODUCES.
+    # drop enforcement must not depend on file layout: without
+    # candidates the commit's schema check rejects the narrower df, with
+    # candidates the union below would fail with a different error.
     dropped_cols = [f.name for f in schema.fields if f.name not in df.columns]
     if dropped_cols:
         raise ValueError(
             f"snapshot_merge: df is missing existing columns "
-            f"{dropped_cols} of {table} — silent column loss is never "
-            "evolution (provide the columns, even if NULL-valued)"
+            f"{dropped_cols} of {table} — snapshot tables keep their "
+            "schema (provide the columns, even if NULL-valued)"
         )
-    candidates, carried = _key_candidates(
-        spark, df, manifest, keys[0], stats_prune
-    )
+    candidates, carried = _key_candidates(spark, df, manifest, keys[0])
     if candidates:
         prev_part = spark.read.schema(schema).parquet(*candidates)
         kept = prev_part.join(
             df.select(*keys).distinct(), keys, "left_anti"
         )
-        # evolve_schema lets an upsert introduce new columns: kept rows
-        # (and carried files) surface NULL for them on read, the commit
-        # widens the manifest schema additively.
-        out = kept.unionByName(df, allowMissingColumns=evolve_schema)
+        out = kept.unionByName(df)
     else:
         out = df
     return snapshot_commit(
@@ -1189,14 +1016,13 @@ def snapshot_merge(
         expected_version=latest,
         tag=tag,
         carry_files=carried or None,
-        evolve_schema=evolve_schema,
         stats_cols=stats_cols,
         meta=meta,
     )
 
 
 def _dml_predicate(prune: dict | None, where: str | None):
-    """The row predicate of a DELETE/UPDATE as a Column, built so that
+    """The row predicate of a DELETE as a Column, built so that
     stats-based file pruning is SAFE BY CONSTRUCTION: the ``prune``
     range bounds are part of the predicate itself (ANDed with ``where``),
     so any row the predicate matches necessarily falls inside the
@@ -1357,150 +1183,6 @@ def snapshot_delete(
     )
 
 
-def snapshot_update(
-    spark: SparkSession,
-    table: str,
-    set: dict[str, str],
-    where: str | None = None,
-    *,
-    prune: dict | None = None,
-    tag: str | None = None,
-) -> int:
-    """Row-level ``UPDATE table SET col = expr, … WHERE …`` as a new
-    snapshot.  ``set`` maps existing columns to SQL expressions (they
-    may reference any column of the row); each assignment is cast back
-    to the column's declared type so the table's physical schema never
-    drifts.  Rows update only where the predicate is TRUE (NULL leaves
-    the row untouched — ANSI UPDATE), and the same
-    prune-bounds-in-the-predicate construction as
-    :func:`snapshot_delete` lets non-overlapping files carry by
-    reference instead of rewriting.  With neither ``where`` nor
-    ``prune`` every row updates (legal for UPDATE, unlike DELETE).  If
-    no file can match, returns the current version without committing.
-    """
-    from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
-
-    versions = _list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    latest = versions[-1]
-    manifest = _read_manifest(spark, table, latest)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    names = {f.name for f in schema.fields}
-    unknown = [c for c in set if c not in names]
-    if unknown:
-        raise ValueError(f"SET targets not in table schema: {unknown}")
-    cond = _dml_predicate(prune, where)
-    candidates, carried = _dml_candidates(
-        manifest["files"], manifest.get("stats", {}), prune
-    )
-    if not candidates:
-        return latest
-    prev_part = spark.read.schema(schema).parquet(*candidates)
-    hit = (
-        SF.coalesce(cond, SF.lit(False)) if cond is not None else SF.lit(True)
-    )
-    cols = []
-    for f in schema.fields:
-        if f.name in set:
-            cols.append(
-                SF.when(hit, SF.expr(set[f.name]).cast(f.dataType))
-                .otherwise(SF.col(f.name))
-                .alias(f.name)
-            )
-        else:
-            cols.append(SF.col(f.name))
-    return snapshot_commit(
-        prev_part.select(*cols),
-        table,
-        mode="overwrite",
-        expected_version=latest,
-        tag=tag,
-        carry_files=carried or None,
-    )
-
-
-def snapshot_history(spark: SparkSession, table: str) -> list[dict]:
-    """Commit log view: one dict per published version — version, file
-    count, tag, batch watermark, stats columns.  Pure manifest metadata
-    (no data touched); the audit surface behind time travel and
-    restore."""
-    out = []
-    for v in _list_versions(spark, table):
-        m = _read_manifest(spark, table, v)
-        out.append(
-            {
-                "version": v,
-                "n_files": len(m["files"]),
-                "tag": m.get("tag"),
-                "last_batch": _committed_batch(m),
-                "stats_cols": m.get("stats_cols"),
-            }
-        )
-    return out
-
-
-def snapshot_restore(spark: SparkSession, table: str, version: int) -> int:
-    """Roll the table back to ``version`` as a NEW commit (Delta
-    RESTORE semantics): the restored snapshot's files are carried BY
-    REFERENCE into a fresh manifest — a metadata-only operation, no
-    rows move, and the rolled-back versions stay readable (and
-    vacuumable) as history.  The batch watermark carries forward so a
-    streaming writer cannot re-append batches committed before the
-    restore point."""
-    versions = _list_versions(spark, table)
-    if version not in versions:
-        raise FileNotFoundError(f"version {version} not in {versions}")
-    latest = versions[-1]
-    src = _read_manifest(spark, table, version)
-    head = _read_manifest(spark, table, latest)
-    new_version = latest + 1
-    # the restored version's files, stats (data skipping stays intact)
-    # and meta binding; the HEAD's watermark (monotone, so replayed
-    # stream batches still skip after a rollback)
-    base = dict(src, last_batch=_committed_batch(head))
-    manifest = _next_manifest(
-        base, new_version, src["files"], src["schema"],
-        tag=f"restore:{version}",
-    )
-    _publish_manifest(spark, table, new_version, manifest)
-    return new_version
-
-
-def snapshot_merge_batch(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    batch_id: int,
-    stats_cols: list[str] | None = None,
-) -> bool:
-    """Idempotent per-micro-batch MERGE: upsert ``df`` by ``keys``
-    unless the table's batch watermark already covers ``batch_id``
-    (same last_batch bookkeeping as :func:`snapshot_append_batch`).
-    Returns whether a commit happened.
-
-    A merge-maintained table records per-file stats on ``keys`` by
-    default — without key bounds every later merge rewrites every file
-    (the round-8 labels finding), which would silently void the
-    pruning this sink's affordability rests on.  The default applies
-    when the table does not exist yet AND when an existing table has
-    no stats_cols at all (a pre-fix bootstrap heals progressively: its
-    old unbounded files still rewrite, but each rewrite and every new
-    file acquires bounds).  An existing table's own stats_cols are
-    never narrowed — the default never overrides a non-empty
-    setting."""
-    _, head = _head(df.sparkSession, table)
-    if _covers(head, batch_id):
-        return False  # replayed batch: already merged
-    if stats_cols is None and not head.get("stats_cols"):
-        stats_cols = list(keys)
-    snapshot_merge(
-        df, table, keys, tag=f"batch:{batch_id}", stats_cols=stats_cols
-    )
-    return True
-
-
 def snapshot_fold_batch(
     fresh: DataFrame,
     table: str,
@@ -1573,170 +1255,6 @@ def snapshot_watermark(
     if not head:
         raise FileNotFoundError(f"no snapshots at {table}")
     return version, _committed_batch(head)
-
-
-def snapshot_merge_stream(
-    events: DataFrame,
-    table: str,
-    keys: list[str],
-    checkpoint_path: str,
-    available_now: bool = True,
-):
-    """Exactly-once streaming UPSERT sink — the transactional twin of
-    the q50 latest-state materialization: each micro-batch MERGEs by
-    key into the snapshot table, so the table IS the current state
-    (newest row per key), maintained incrementally with snapshot
-    isolation for readers and batch-id idempotency under redelivery.
-
-    Contract: each micro-batch must carry at most one row per key
-    (pre-aggregate in the stream — e.g. ``dropDuplicates(keys)`` or a
-    latest-wins reduce — otherwise both rows land).  Against a
-    key-clustered table the per-batch merge rewrites only the files the
-    batch's keys touch (:func:`snapshot_merge` pruning), which is what
-    makes a continuous upsert stream affordable at 100 TB.  (Single
-    writer per table, like every Structured Streaming sink.)
-    """
-
-    def body(df: DataFrame, batch_id: int) -> None:
-        snapshot_merge_batch(df, table, keys, batch_id)
-
-    from ros_sql_spark.streaming.util import start_foreach_batch
-
-    return start_foreach_batch(events, body, checkpoint_path, available_now)
-
-
-def snapshot_changes(
-    spark: SparkSession,
-    table: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Row-level diff between two snapshots — the CDC feed an
-    incremental consumer reads instead of re-scanning the table:
-    ``_change = 'insert'`` rows exist in ``to`` but not ``from``,
-    ``'delete'`` rows the reverse (an update is a delete+insert pair).
-    Multiset semantics (``exceptAll``) so duplicate rows diff by count.
-
-    Scale note: this is the STATELESS form — no stored row ids — but
-    it is manifest-PRUNED (round 11): data files are immutable and
-    manifest-addressed, so any file present in BOTH versions
-    contributes identical rows to both multisets and cancels out of
-    the exceptAll exactly.  Each side therefore scans only ITS OWN
-    manifest's file-set difference: diffing adjacent versions of a
-    100 TB table where one file changed reads two files, not 200 TB
-    (verified by ``inputFiles()`` in tests).  A compaction between the
-    versions rewrites every path — nothing shared, the diff degrades
-    to the full scan and still returns the correct (empty) answer.
-    Consumers that can act on appends only should instead read the
-    manifest delta (files added between versions are pure inserts for
-    append-only tables — zero data diffed); this diff is for
-    overwrite/merge/replace_where histories where files alone cannot
-    tell which rows changed.
-    """
-    versions = _list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    to_v = to_version if to_version is not None else versions[-1]
-    # validate BOTH endpoints against retained versions up front — the
-    # manifest-direct reads below would otherwise surface a vacuumed
-    # from_version as a bare missing-file error (round-11 review note)
-    for v in (from_version, to_v):
-        if v not in versions:
-            raise FileNotFoundError(
-                f"version {v} not in retained versions {versions} of "
-                f"{table} (vacuumed?)"
-            )
-    from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
-
-    old_manifest = _read_manifest(spark, table, from_version)
-    # one manifest fetch, reused for the schema compare and the
-    # evolution read (each _read_manifest is a driver round trip over
-    # an O(files) JSON body — a CDC poll loop was paying it thrice)
-    to_manifest = _read_manifest(spark, table, to_v)
-    # manifest pruning (docstring): shared immutable files cancel out
-    # of the multiset diff exactly — scan only each side's difference.
-    # Both sides read under the NEW schema (old files surface NULL for
-    # columns they predate, exactly as the new snapshot reads those
-    # same carried files), so evolution and pruning compose.
-    shared = set(old_manifest["files"]) & set(to_manifest["files"])
-    to_schema = StructType.fromJson(json.loads(to_manifest["schema"]))
-
-    def _side(manifest: dict) -> DataFrame:
-        files = [f for f in manifest["files"] if f not in shared]
-        if not files:
-            return spark.createDataFrame([], to_schema)
-        return spark.read.schema(to_schema).parquet(*files)
-
-    new = _side(to_manifest)
-    old = _side(old_manifest)
-    ins = new.exceptAll(old).withColumn("_change", SF.lit("insert"))
-    dels = old.exceptAll(new).withColumn("_change", SF.lit("delete"))
-    return ins.unionByName(dels)
-
-
-def snapshot_read_incremental(
-    spark: SparkSession,
-    table: str,
-    since_version: int,
-    strict: bool = True,
-) -> tuple[DataFrame, int]:
-    """Rows ADDED after ``since_version`` — the incremental-consumer
-    fast path.  For an append-only history the manifest delta IS the
-    row delta: the new snapshot's files minus the old one's are pure
-    inserts, so the reader scans ONLY the new files and diffs zero
-    data (at 100 TB this is the difference between "read this hour's
-    files" and "diff two full table snapshots").  Returns
-    ``(rows_df, to_version)``; feed ``to_version`` back as the next
-    call's ``since_version`` (exactly-once cursor, manifest-versioned).
-
-    If files were REMOVED in between (compact / merge / overwrite /
-    replace_where), file delta ≠ row delta — with ``strict=True``
-    (default) that raises so the consumer decides; ``strict=False``
-    falls back to the full :func:`snapshot_changes` diff filtered to
-    inserts (correct, but scans both snapshots).  A compaction that
-    rewrote rows it already delivered is indistinguishable from new
-    data at the file tier — hence the hard error, matching the
-    "process once from a version cursor" contract.
-    """
-    versions = _list_versions(spark, table)
-    if since_version not in versions:
-        raise FileNotFoundError(
-            f"since_version {since_version} not in {versions} — the "
-            "cursor's manifest was vacuumed; re-baseline from a full read"
-        )
-    to_v = versions[-1]
-    since_manifest = _read_manifest(spark, table, since_version)
-    old_files = set(since_manifest["files"])
-    if to_v == since_version:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(since_manifest["schema"]))
-        return spark.createDataFrame([], schema), to_v
-    manifest = _read_manifest(spark, table, to_v)
-    new_files = [f for f in manifest["files"] if f not in old_files]
-    removed = old_files - set(manifest["files"])
-    if removed:
-        if strict:
-            raise ValueError(
-                f"history {since_version}→{to_v} removed "
-                f"{len(removed)} files (compact/merge/overwrite): file "
-                "delta is not a row delta — pass strict=False for a "
-                "full diff, or re-baseline"
-            )
-        from pyspark.sql import functions as SF
-
-        diff = snapshot_changes(spark, table, since_version, to_v)
-        return (
-            diff.filter(SF.col("_change") == "insert").drop("_change"),
-            to_v,
-        )
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    if not new_files:
-        return spark.createDataFrame([], schema), to_v
-    return spark.read.schema(schema).parquet(*new_files), to_v
 
 
 def _staging_version(dirname: str) -> int | None:

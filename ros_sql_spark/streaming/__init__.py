@@ -1,9 +1,7 @@
 from ros_sql_spark.streaming.replay import (  # noqa: F401
-    idempotent_sink_batch,
     session_counts,
     stream_events,
     tumbling_counts,
-    write_idempotent,
 )
 from ros_sql_spark.streaming.rollup import (  # noqa: F401
     continuous_rollup,

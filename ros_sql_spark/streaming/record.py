@@ -107,7 +107,10 @@ def record_stream(
 
     Topic values in ``topic_col`` must match declared topic names
     (declare_topics).  Undeclared values fail the batch loudly — the
-    reference's declare-before-write contract.
+    reference's declare-before-write contract.  ``key_cols`` must equal
+    the keys every topic was declared with (playback orders by the
+    declared keys); a mismatch raises ``ValueError`` before the query
+    starts.
 
     ``dedup_keys``: dedup-on-ingest — keep the FIRST occurrence per key
     within the ``dedup_watermark`` horizon before demux
@@ -130,6 +133,16 @@ def record_stream(
     precisely this reason.
     """
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
+    differing = {
+        topic: list(entry.key_cols)
+        for topic, entry in catalog.topics.items()
+        if list(entry.key_cols) != list(key_cols)
+    }
+    if differing:
+        raise ValueError(
+            f"key_cols {list(key_cols)} differ from the declared keys "
+            f"{differing}; pass the keys declare_topics recorded"
+        )
     if dedup_keys:
         from ros_sql_spark.streaming.stateful import streaming_dedup
 
@@ -161,6 +174,15 @@ def record_stream_snapshot(
     Layout: one ``store_path/<table>/<table>`` snapshot table per topic;
     read with ``snapshot_read``; same declare-before-write catalog
     contract as record_stream.
+
+    A store is bound to the checkpoint that wrote it.  The watermark is
+    keyed by batch id alone and a fresh checkpoint restarts batch ids at
+    0, so a new checkpoint over an existing store is treated as a
+    redelivery: every batch the store's watermark covers is skipped.
+    That is what makes a fresh-checkpoint redelivery exactly-once, and
+    it also means a NEW recording session must resume the store's
+    checkpoint or write a new store — recorded with a fresh checkpoint
+    into an old store, its first batches are silently dropped.
     """
     from ros_sql_spark.sources.snapshot import snapshot_append_batch
 

@@ -6,11 +6,9 @@ Reference parity (SURVEY.md §2.1/§3):
   table standing in for the live topic; micro-batches replace per-message
   commits (the reference's throughput ceiling, §4.1).
 - R7 insert / R13 playback sink: per-message SQL round-trips.
-  Twin: ``write_idempotent`` — foreachBatch with key-level idempotency,
-  so batch replays (Structured Streaming's at-least-once redelivery)
-  produce exactly-once results in the sink.  The same batch body works
-  unchanged against JDBC (``df.write.jdbc``); this container has no DB
-  server, so the sink is a parquet directory.
+  Twins: the exactly-once recorders in ``streaming/record.py`` —
+  ``record_stream_snapshot`` (batch watermark on the snapshot manifest)
+  and ``record_stream_jdbc`` (key anti-join into a JDBC database).
 - Watermarks + windows: the reference never aggregates (it only stores);
   our engine adds event-time session/tumbling windows with late-data
   eviction — the streaming twin of batch q16.
@@ -18,10 +16,6 @@ Reference parity (SURVEY.md §2.1/§3):
 Scale notes:
 - File-source streaming lists and checkpoints file progress — at
   production scale use ``maxFilesPerTrigger`` to bound batch size.
-- The idempotent sink does an anti-join per batch against existing sink
-  keys, pruned to the sink partitions the batch touches; with a real
-  JDBC target this becomes ``INSERT ... ON CONFLICT DO NOTHING`` /
-  MERGE, pushing idempotency into the store.
 - State eviction: ``withWatermark`` bounds session state; without it a
   100 TB stream accumulates unbounded per-user state.
 """
@@ -46,8 +40,6 @@ __all__ = [
     "stream_events",
     "session_counts",
     "tumbling_counts",
-    "idempotent_sink_batch",
-    "write_idempotent",
 ]
 
 
@@ -123,64 +115,3 @@ def tumbling_counts(events: DataFrame, width: str = "1 day",
         .select(F.col("w.start").alias("w_start"), "event_type", "n")
     )
 
-
-def idempotent_sink_batch(
-    batch_df: DataFrame, batch_id: int, sink_path: str, key_cols: list[str]
-) -> None:
-    """One foreachBatch body: append only rows whose keys are absent.
-
-    Exactly-once on top of at-least-once redelivery: a replayed batch
-    finds all its keys present and appends nothing.  JDBC variant: same
-    body with ``existing = spark.read.jdbc(...)`` and
-    ``batch_df.write.jdbc(mode="append")`` — or push the dedup into the
-    store with MERGE / ON CONFLICT DO NOTHING.
-    """
-    from pyspark.errors import AnalysisException
-
-    spark = batch_df.sparkSession
-    fresh = batch_df.dropDuplicates(key_cols)
-    try:
-        existing = spark.read.parquet(sink_path).select(*key_cols)
-        fresh = fresh.join(existing, key_cols, "left_anti")
-    except AnalysisException as exc:
-        # ONLY the first-batch cases may be swallowed: sink not created
-        # yet (PATH_NOT_FOUND) or pre-created but still EMPTY — e.g. a
-        # deployment `mkdir -p`, or a dir holding only _spark_metadata
-        # (UNABLE_TO_INFER_SCHEMA: no parquet footers to read, so there
-        # is provably nothing to anti-join against).  A corrupt or
-        # unreadable sink must still fail loudly — silently skipping
-        # the anti-join would re-append every batch.
-        cond = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", None
-        )
-        klass = str(cond() or "") if cond is not None else ""
-        missing = (
-            "PATH_NOT_FOUND" in klass
-            or "UNABLE_TO_INFER_SCHEMA" in klass
-            or "Path does not exist" in str(exc)
-        )
-        if not missing:
-            raise
-    fresh.write.mode("append").parquet(sink_path)
-
-
-def write_idempotent(
-    events: DataFrame,
-    sink_path: str,
-    checkpoint_path: str,
-    key_cols: list[str] | None = None,
-    available_now: bool = True,
-):
-    """R7/R13 sink twin: stream → idempotent append sink via foreachBatch.
-
-    Returns the StreamingQuery; with ``available_now`` the query drains
-    all currently-available input then stops (replay-to-sink semantics).
-    """
-    keys = key_cols or ["event_id"]
-
-    def body(df: DataFrame, bid: int) -> None:
-        idempotent_sink_batch(df, bid, sink_path, keys)
-
-    from ros_sql_spark.streaming.util import start_foreach_batch
-
-    return start_foreach_batch(events, body, checkpoint_path, available_now)

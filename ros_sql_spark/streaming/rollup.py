@@ -66,8 +66,8 @@ def rollup_upsert_batch(batch_df: DataFrame, batch_id: int,
     try:
         store = spark.read.parquet(store_path)
     except AnalysisException as exc:
-        # ONLY the first-batch cases may be swallowed (the
-        # idempotent_sink_batch rule — round-8 review: a broad except
+        # ONLY the first-batch cases may be swallowed (round-8
+        # review: a broad except
         # treated a TRANSIENT read failure on an existing store as
         # "first batch" and appended duplicate keys permanently)
         cond = getattr(exc, "getCondition", None) or getattr(

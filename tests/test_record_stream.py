@@ -537,6 +537,87 @@ def test_record_stream_snapshot_fidelity_edge_cases(spark, tmp_path):
     ]
 
 
+def _scan_session(spark, tmp_path, name, ids):
+    """A one-file source dir of ``scan`` messages with these ids."""
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("ts_ns", T.LongType()),
+            T.StructField("topic", T.StringType()),
+        ]
+    )
+    src = str(tmp_path / name)
+    spark.createDataFrame(
+        [(i, 10 * i, "scan") for i in ids], schema
+    ).coalesce(1).write.parquet(src)
+    return spark.readStream.schema(schema).parquet(src)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="the snapshot batch watermark is keyed by batch id alone and a "
+    "fresh checkpoint restarts batch ids at 0, so a second recording "
+    "session into the same store is skipped as a redelivery",
+)
+def test_record_stream_snapshot_second_session_lands(spark, tmp_path):
+    """Two recording sessions, each with its own checkpoint, into one
+    snapshot store must replay all four messages, as they do through
+    ``record_stream``."""
+    from ros_sql_spark.streaming.record import record_stream_snapshot
+
+    store = str(tmp_path / "store")
+    declare_topics(
+        store,
+        {"scan": T.StructType([T.StructField("id", T.LongType()),
+                               T.StructField("ts_ns", T.LongType())])},
+        ["id"],
+    )
+    for session, ids in (("a", [1, 2]), ("b", [3, 4])):
+        q = record_stream_snapshot(
+            _scan_session(spark, tmp_path, f"src_{session}", ids),
+            topic_col="topic",
+            store_path=store,
+            checkpoint_path=str(tmp_path / f"ck_{session}"),
+        )
+        q.awaitTermination(180)
+        assert not q.isActive
+    got = [r.id for r in playback(spark, store, "scan").collect()]
+    assert got == [1, 2, 3, 4]
+
+
+def test_record_stream_rejects_undeclared_key_cols(spark, tmp_path):
+    """record_stream's ``key_cols`` must be the declared keys: a mismatch
+    raises before any query starts, and the declared keys record as
+    before."""
+    store = str(tmp_path / "store")
+    declare_topics(
+        store,
+        {"scan": T.StructType([T.StructField("id", T.LongType()),
+                               T.StructField("ts_ns", T.LongType())])},
+        ["id"],
+    )
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="differ from the declared keys"):
+        record_stream(
+            _scan_session(spark, tmp_path, "src_bad", [1]),
+            topic_col="topic",
+            store_path=store,
+            key_cols=["ts_ns"],
+            checkpoint_path=str(tmp_path / "ck_bad"),
+        )
+    assert len(spark.streams.active) == active  # no query started
+    q = record_stream(
+        _scan_session(spark, tmp_path, "src", [2, 1]),
+        topic_col="topic",
+        store_path=store,
+        key_cols=["id"],
+        checkpoint_path=str(tmp_path / "ck"),
+    )
+    q.awaitTermination(180)
+    assert not q.isActive
+    assert [r.id for r in playback(spark, store, "scan").collect()] == [1, 2]
+
+
 def test_commit_concurrently_waits_for_every_commit(spark):
     """The recorders' batch commit: thunks run concurrently under the
     caller's job group, and the first failure surfaces only after every

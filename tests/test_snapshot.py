@@ -1,5 +1,6 @@
 """Manifest-based snapshot tables: atomic commit, snapshot isolation,
-time travel, optimistic concurrency, predicate replacement, vacuum."""
+time travel, optimistic concurrency, keyed MERGE, row-level DELETE,
+compaction, vacuum and the batch-watermark sinks."""
 
 from __future__ import annotations
 
@@ -62,31 +63,6 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
     assert snapshot_commit(_df(spark, 0, 5, "b"), t, expected_version=1) == 2
 
 
-def test_replace_where_partition_swap(spark, tmp_path):
-    """replace_where rewrites one 'partition' and keeps the rest; the
-    previous snapshot is untouched."""
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 90, "a"), t)
-    patch = _df(spark, 1000, 1030, "patched").withColumn(
-        "part", F.lit(1).cast("bigint")
-    )
-    snapshot_commit(patch, t, replace_where="part = 1")
-
-    latest = snapshot_read(spark, t)
-    assert latest.filter("part = 1").count() == 30
-    assert {
-        r.tag for r in latest.filter("part = 1").select("tag").distinct().collect()
-    } == {"patched"}
-    # untouched parts intact (ids 0..89 with part != 1 -> 60 rows)
-    assert latest.filter("part != 1").count() == 60
-    assert {
-        r.tag
-        for r in latest.filter("part != 1").select("tag").distinct().collect()
-    } == {"a"}
-    # time travel: v1 still has the original 90
-    assert snapshot_read(spark, t, version=1).count() == 90
-
-
 def test_vacuum_deletes_only_unreachable(spark, tmp_path):
     t = str(tmp_path / "tbl")
     snapshot_commit(_df(spark, 0, 30, "a"), t)
@@ -126,52 +102,6 @@ def test_append_mode_carries_files_by_reference(spark, tmp_path):
     assert snapshot_read(spark, t, version=1).count() == 30
 
 
-def test_append_rejects_replace_where(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        snapshot_commit(
-            _df(spark, 0, 5, "a"), t, mode="append", replace_where="part=1"
-        )
-
-
-def test_snapshot_stream_sink_exactly_once_under_replay(spark, tmp_path):
-    """Drain a multi-batch stream into the snapshot sink, then replay it
-    from a FRESH checkpoint: every batch re-runs, every commit is
-    skipped by the tag check, and the table is unchanged."""
-    from ros_sql_spark.sources.io import load_table
-    from ros_sql_spark.sources.snapshot import snapshot_write_stream
-    from tests.conftest import SF_SMALL
-
-    feed = str(tmp_path / "feed")
-    load_table(spark, SF_SMALL, "documents").select(
-        "doc_id", "source", "n_chars"
-    ).repartition(3).write.parquet(feed)
-    schema = "doc_id BIGINT, source STRING, n_chars BIGINT"
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-
-    t = str(tmp_path / "tbl")
-    q = snapshot_write_stream(stream(), t, str(tmp_path / "ck1"))
-    q.awaitTermination(120)
-    assert not q.isActive
-    n = snapshot_read(spark, t).count()
-    assert n == 500
-    v_after_first = snapshot_versions(spark, t)[-1]
-    assert v_after_first >= 3  # one atomic commit per micro-batch
-
-    # full redelivery: fresh checkpoint, same table
-    q2 = snapshot_write_stream(stream(), t, str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
-    assert not q2.isActive
-    assert snapshot_read(spark, t).count() == 500
-    assert snapshot_versions(spark, t)[-1] == v_after_first
-
-
 def test_commit_rejects_schema_drift(spark, tmp_path):
     """Mixed physical schemas in one snapshot would make reads fail
     nondeterministically (vectorized reader can't upcast INT32 files
@@ -185,36 +115,25 @@ def test_commit_rejects_schema_drift(spark, tmp_path):
 
 def test_compact_preserves_rows_and_stream_idempotency(spark, tmp_path):
     """Compaction rewrites the fragmented snapshot into few files as a
-    NEW version (old one still readable), carries the batch tag forward
-    so a post-compaction stream replay still skips, and never changes
-    row content."""
+    NEW version (old one still readable), carries the batch watermark
+    forward so a post-compaction replay of the batches still skips, and
+    never changes row content."""
     import json
 
-    from ros_sql_spark.sources.io import load_table
     from ros_sql_spark.sources.snapshot import (
+        snapshot_append_batch,
         snapshot_compact,
-        snapshot_write_stream,
     )
-    from tests.conftest import SF_SMALL
 
-    feed = str(tmp_path / "feed")
-    load_table(spark, SF_SMALL, "documents").select(
-        "doc_id", "source", "n_chars"
-    ).repartition(3).write.parquet(feed)
-    schema = "doc_id BIGINT, source STRING, n_chars BIGINT"
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
+    def batch(b):
+        return _df(spark, 100 * b, 100 * b + 100, f"b{b}").repartition(2)
 
     t = str(tmp_path / "tbl")
-    q = snapshot_write_stream(stream(), t, str(tmp_path / "ck1"))
-    q.awaitTermination(120)
+    for b in range(3):  # one append commit per micro-batch: fragmented
+        assert snapshot_append_batch(batch(b), t, b)
     frag_v = snapshot_versions(spark, t)[-1]
     before = {tuple(r) for r in snapshot_read(spark, t).collect()}
+    assert len(before) == 300
 
     v = snapshot_compact(spark, t, target_files=1)
     assert v == frag_v + 1
@@ -228,9 +147,9 @@ def test_compact_preserves_rows_and_stream_idempotency(spark, tmp_path):
         tuple(r) for r in snapshot_read(spark, t, version=frag_v).collect()
     } == before
 
-    # stream replay AFTER compaction: tag carried -> still exactly-once
-    q2 = snapshot_write_stream(stream(), t, str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
+    # batch replay AFTER compaction: watermark carried -> still exactly-once
+    for b in range(3):
+        assert not snapshot_append_batch(batch(b), t, b)
     assert snapshot_versions(spark, t)[-1] == v
     assert {tuple(r) for r in snapshot_read(spark, t).collect()} == before
 
@@ -512,213 +431,6 @@ def test_merge_on_empty_table_is_first_commit(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 10
 
 
-def test_snapshot_changes_diff(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import snapshot_changes, snapshot_merge
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 100, "base").coalesce(1), t, stats_cols=["id"])
-    snapshot_merge(_df(spark, 40, 60, "upd"), t, keys=["id"])
-    ch = snapshot_changes(spark, t, from_version=1).collect()
-    by = {}
-    for r in ch:
-        by.setdefault(r._change, []).append((r.id, r.tag))
-    assert sorted(by["insert"]) == [(i, "upd") for i in range(40, 60)]
-    assert sorted(by["delete"]) == [(i, "base") for i in range(40, 60)]
-
-
-def test_read_incremental_appends_only_new_files(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import snapshot_read_incremental
-
-    t = str(tmp_path / "tbl")
-    v1 = snapshot_commit(_df(spark, 0, 100, "a").coalesce(1), t)
-    snapshot_commit(_df(spark, 100, 150, "b").coalesce(1), t, mode="append")
-    snapshot_commit(_df(spark, 150, 170, "c").coalesce(1), t, mode="append")
-    inc, v = snapshot_read_incremental(spark, t, since_version=v1)
-    assert v == 3
-    assert len(inc.inputFiles()) == 2  # only the two appended files
-    assert inc.count() == 70
-    assert {r.tag for r in inc.select("tag").distinct().collect()} == {"b", "c"}
-    # cursor at head: empty delta, same schema
-    inc2, v2 = snapshot_read_incremental(spark, t, since_version=v)
-    assert v2 == 3 and inc2.count() == 0
-    assert inc2.columns == ["id", "tag", "part"]
-
-
-def test_read_incremental_detects_rewrites(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_compact,
-        snapshot_merge,
-        snapshot_read_incremental,
-    )
-
-    t = str(tmp_path / "tbl")
-    v1 = snapshot_commit(_df(spark, 0, 100, "a").coalesce(1), t)
-    snapshot_compact(spark, t, target_files=2)
-    with pytest.raises(ValueError, match="removed"):
-        snapshot_read_incremental(spark, t, since_version=v1)
-    # non-strict: falls back to the row diff (compaction → no row change)
-    inc, v = snapshot_read_incremental(spark, t, since_version=v1, strict=False)
-    assert inc.count() == 0
-    # after a merge, non-strict surfaces exactly the upserted rows
-    snapshot_merge(_df(spark, 90, 120, "up"), t, keys=["id"])
-    inc2, _ = snapshot_read_incremental(spark, t, since_version=v, strict=False)
-    assert inc2.count() == 30
-    assert {r.tag for r in inc2.select("tag").distinct().collect()} == {"up"}
-    # vacuumed cursor: actionable error
-    with pytest.raises(FileNotFoundError, match="not in"):
-        snapshot_read_incremental(spark, t, since_version=99)
-
-
-def test_zorder_compact_prunes_both_dimensions(spark, tmp_path):
-    """2-d grid clustered by Morton key: a range read on EITHER column
-    alone skips files (linear clustering would only skip on its prefix
-    column)."""
-    from ros_sql_spark.sources.snapshot import snapshot_compact
-
-    t = str(tmp_path / "tbl")
-    grid = spark.range(0, 64 * 64).select(
-        (F.col("id") % 64).alias("x"),
-        (F.col("id") / 64).cast("bigint").alias("y"),
-        F.col("id"),
-    )
-    snapshot_commit(grid.repartition(4), t, stats_cols=["x", "y"])
-    v = snapshot_compact(spark, t, target_files=16, zorder_by=["x", "y"])
-    nfiles = len(snapshot_read(spark, t, version=v).inputFiles())
-    assert nfiles == 16
-    px = snapshot_read(spark, t, version=v, prune={"x": (0, 7)})
-    py = snapshot_read(spark, t, version=v, prune={"y": (0, 7)})
-    assert len(px.inputFiles()) < nfiles
-    assert len(py.inputFiles()) < nfiles
-    # correctness unchanged
-    assert px.filter("x <= 7").count() == 8 * 64
-    assert py.filter("y <= 7").count() == 8 * 64
-    # the combined box prunes hardest
-    pxy = snapshot_read(spark, t, version=v, prune={"x": (0, 7), "y": (0, 7)})
-    assert len(pxy.inputFiles()) <= min(len(px.inputFiles()), len(py.inputFiles()))
-    assert pxy.filter("x <= 7 AND y <= 7").count() == 64
-
-
-def test_zorder_key_validation(spark):
-    from ros_sql_spark.functions.zorder import zorder_key
-
-    with pytest.raises(ValueError, match="BIGINT"):
-        zorder_key({"a": (0, 1), "b": (0, 1)}, bits=32)
-    with pytest.raises(ValueError, match="at least one"):
-        zorder_key({})
-
-
-def test_merge_stream_maintains_latest_state_exactly_once(spark, tmp_path):
-    """Stream per-key updates through the merge sink: the table ends as
-    the latest row per key; a full redelivery from a fresh checkpoint
-    changes nothing (batch watermark skips every replayed merge)."""
-    from ros_sql_spark.sources.snapshot import (
-        _read_manifest,
-        snapshot_merge_stream,
-        snapshot_versions,
-    )
-
-    feed = str(tmp_path / "feed")
-    # 3 files, overlapping keys: file i upserts ids [0, 30+10i) tagged fi
-    for i in range(3):
-        _df(spark, 0, 30 + 10 * i, f"f{i}").coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-    schema = "id BIGINT, tag STRING, part BIGINT"
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-
-    t = str(tmp_path / "tbl")
-    q = snapshot_merge_stream(stream(), t, ["id"], str(tmp_path / "ck1"))
-    q.awaitTermination(120)
-    assert not q.isActive
-    got = snapshot_read(spark, t)
-    assert got.count() == 50  # union of keys, one row each
-    v_head = snapshot_versions(spark, t)[-1]
-    # ids 0-29 were upserted by every batch; whichever batch ran last
-    # won — but each id appears exactly once
-    assert got.groupBy("id").count().filter("count > 1").count() == 0
-
-    q2 = snapshot_merge_stream(stream(), t, ["id"], str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
-    assert not q2.isActive
-    assert snapshot_versions(spark, t)[-1] == v_head
-    assert snapshot_read(spark, t).count() == 50
-
-    # a table BOOTSTRAPPED by the merge sink records key bounds
-    # (round-8: without them every later merge rewrites every file)
-    m = _read_manifest(spark, t, v_head)
-    assert m.get("stats_cols") == ["id"], m
-
-    # and a LEGACY stats-less table heals on its first merge through
-    # the sink: the commit records key bounds so later merges prune
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_commit,
-        snapshot_merge_batch,
-    )
-
-    legacy = str(tmp_path / "legacy")
-    snapshot_commit(_df(spark, 0, 20, "old"), legacy)  # no stats_cols
-    m0 = _read_manifest(spark, legacy, 1)
-    assert m0.get("stats_cols") is None
-    assert snapshot_merge_batch(_df(spark, 10, 30, "new"), legacy, ["id"], 0)
-    m1 = _read_manifest(
-        spark, legacy, snapshot_versions(spark, legacy)[-1]
-    )
-    assert m1.get("stats_cols") == ["id"], m1
-
-
-def test_history_and_restore_metadata_only(spark, tmp_path):
-    """RESTORE rolls back as a new commit carrying files by reference
-    (no data rewrite — the restored manifest lists the old version's
-    exact paths), history shows the whole trail, and the batch
-    watermark survives the rollback (no stream re-appends)."""
-    from ros_sql_spark.sources.snapshot import (
-        _read_manifest,
-        snapshot_append_batch,
-        snapshot_history,
-        snapshot_restore,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 50, "v1").coalesce(1), t, stats_cols=["id"])
-    snapshot_append_batch(_df(spark, 50, 80, "v2").coalesce(1), t, batch_id=7)
-    snapshot_commit(_df(spark, 0, 5, "bad"), t)  # the commit to undo
-    v = snapshot_restore(spark, t, version=2)
-    assert v == 4
-    got = snapshot_read(spark, t)
-    assert got.count() == 80
-    assert {r.tag for r in got.select("tag").distinct().collect()} == {"v1", "v2"}
-    m = _read_manifest(spark, t, 4)
-    assert m["files"] == _read_manifest(spark, t, 2)["files"]  # by reference
-    assert m["last_batch"] == 7  # watermark kept: batch 7 still skips
-    assert not snapshot_append_batch(
-        _df(spark, 50, 80, "v2").coalesce(1), t, batch_id=7
-    )
-    hist = snapshot_history(spark, t)
-    assert [h["version"] for h in hist] == [1, 2, 3, 4]
-    assert hist[-1]["tag"] == "restore:2"
-    assert hist[1]["tag"] == "batch:7"
-    # restored stats still skip files
-    pruned = snapshot_read(spark, t, prune={"id": (50, None)})
-    assert len(pruned.inputFiles()) == 1
-
-
-def test_zorder_compact_on_empty_snapshot(spark, tmp_path):
-    """Empty snapshot + zorder_by: nothing to cluster — plain rewrite,
-    no crash (bounds are all NULL)."""
-    from ros_sql_spark.sources.snapshot import snapshot_compact
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 10, "a").filter("id < 0"), t)
-    v = snapshot_compact(spark, t, target_files=2, zorder_by=["id", "part"])
-    assert snapshot_read(spark, t, version=v).count() == 0
-
-
 def test_merge_with_string_key_stats_prune(spark, tmp_path):
     """Key pruning must work for STRING keys too: parquet footers carry
     string min/max, the file-bounds table is string-typed, and BETWEEN
@@ -794,7 +506,7 @@ def test_concurrent_append_retry_soak(spark, tmp_path):
     assert all(per_tag[f"w{i}"] == 30 for i in range(4))
 
 
-# ---- row-level DML: DELETE / UPDATE --------------------------------
+# ---- row-level DML: DELETE ------------------------------------------
 
 
 def test_delete_prunes_files_and_matches_semantics(spark, tmp_path):
@@ -858,127 +570,35 @@ def test_delete_noop_and_unconditional_refused(spark, tmp_path):
         snapshot_delete(spark, t)
 
 
-def test_update_rewrites_only_touched_files(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import (
-        _read_manifest,
-        snapshot_compact,
-        snapshot_update,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        _df(spark, 0, 800, "base").repartition(8), t, stats_cols=["id"]
-    )
-    snapshot_compact(spark, t, target_files=8, cluster_by=["id"])
-    pre_files = set(_read_manifest(spark, t, 2)["files"])
-    pre_schema = snapshot_read(spark, t).schema
-    v = snapshot_update(
-        spark,
-        t,
-        {"tag": "concat(tag, '!')", "part": "part + 100"},
-        "id % 2 = 0",
-        prune={"id": (0, 99)},
-    )
-    m = _read_manifest(spark, t, v)
-    assert [f for f in m["files"] if f in pre_files], "no files carried"
-    got = snapshot_read(spark, t, version=v)
-    assert got.schema == pre_schema  # SET casts back: no physical drift
-    assert got.count() == 800
-    assert got.filter("tag = 'base!'").count() == 50  # even ids in 0-99
-    assert got.filter("part >= 100").count() == 50
-    assert got.filter("id >= 100 AND tag != 'base'").count() == 0
-
-
-def test_update_validates_set_targets(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import snapshot_update
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 10, "a"), t)
-    with pytest.raises(ValueError, match="SET targets"):
-        snapshot_update(spark, t, {"nope": "1"})
-
-
-# ---- additive schema evolution -------------------------------------
-
-
-def test_schema_evolution_additive_append(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 50, "a"), t)
-    wide = _df(spark, 50, 80, "b").withColumn("score", F.col("id") * 1.5)
-    # without the flag: hard error with the additive hint
-    with pytest.raises(ValueError, match="evolve_schema=True"):
-        snapshot_commit(wide, t, mode="append")
-    v2 = snapshot_commit(wide, t, mode="append", evolve_schema=True)
-    got = snapshot_read(spark, t, version=v2)
-    assert got.count() == 80
-    assert "score" in got.columns
-    # pre-evolution rows surface NULL for the new column
-    assert got.filter("score IS NULL").count() == 50
-    assert got.filter("score IS NOT NULL AND tag = 'b'").count() == 30
-    # time travel still shows the narrow schema
-    assert "score" not in snapshot_read(spark, t, version=1).columns
-    # post-evolution appends with the wide schema need no flag
-    v3 = snapshot_commit(
-        _df(spark, 80, 90, "c").withColumn("score", F.lit(0.0)),
-        t,
-        mode="append",
-    )
-    assert snapshot_read(spark, t, version=v3).count() == 90
+# ---- schema contract -----------------------------------------------
 
 
 def test_schema_evolution_rejects_drop_and_retype(spark, tmp_path):
+    """A snapshot table keeps its schema: a dropped, retyped or added
+    column is rejected and names the offending column."""
     t = str(tmp_path / "tbl")
     snapshot_commit(_df(spark, 0, 10, "a"), t)
-    with pytest.raises(ValueError, match="dropped"):
+    with pytest.raises(ValueError, match=r"dropped: \['part'\]"):
         snapshot_commit(
             _df(spark, 0, 5, "b").drop("part"),
             t,
             mode="append",
-            evolve_schema=True,
         )
-    with pytest.raises(ValueError, match="retyped"):
+    with pytest.raises(ValueError, match=r"retyped: \['part'\]"):
         snapshot_commit(
             _df(spark, 0, 5, "b").withColumn(
                 "part", F.col("part").cast("int")
             ),
             t,
             mode="append",
-            evolve_schema=True,
         )
-
-
-def test_merge_with_schema_evolution(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import snapshot_merge
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 100, "base"), t)
-    up = _df(spark, 90, 110, "up").withColumn("score", F.lit(1.0))
-    v = snapshot_merge(up, t, keys=["id"], evolve_schema=True)
-    got = snapshot_read(spark, t, version=v)
-    assert got.count() == 110
-    assert got.filter("score IS NOT NULL").count() == 20
-    assert got.filter("id < 90 AND score IS NULL").count() == 90
-
-
-def test_changes_across_schema_evolution(spark, tmp_path):
-    """CDC across an evolution boundary compares rows under the wider
-    schema: carried files diff as unchanged, only the appended rows are
-    inserts."""
-    from ros_sql_spark.sources.snapshot import snapshot_changes
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 50, "a"), t)
-    snapshot_commit(
-        _df(spark, 50, 60, "b").withColumn("score", F.lit(2.0)),
-        t,
-        mode="append",
-        evolve_schema=True,
-    )
-    diff = snapshot_changes(spark, t, 1, 2)
-    assert diff.filter("_change = 'delete'").count() == 0
-    ins = diff.filter("_change = 'insert'")
-    assert ins.count() == 10
-    assert ins.filter("score = 2.0").count() == 10
+    with pytest.raises(ValueError, match=r"added: \['score'\]"):
+        snapshot_commit(
+            _df(spark, 0, 5, "b").withColumn("score", F.col("id") * 1.5),
+            t,
+            mode="append",
+        )
+    assert snapshot_versions(spark, t) == [1]
 
 
 def test_retention_delete_drops_contained_files_metadata_only(
@@ -1053,21 +673,6 @@ def test_delete_with_where_never_drops_files_blind(spark, tmp_path):
     got = snapshot_read(spark, t, version=v)
     assert got.filter("part = 0").count() == 0
     assert got.count() == _df(spark, 0, 100, "a").filter("part != 0").count()
-
-
-def test_update_set_reads_pre_update_row(spark, tmp_path):
-    """ANSI UPDATE: every SET expression evaluates against the
-    PRE-update row — the classic swap must actually swap."""
-    from ros_sql_spark.sources.snapshot import snapshot_update
-
-    t = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(1, 10, 20), (2, 30, 40)], "id INT, a INT, b INT"
-    )
-    snapshot_commit(df, t)
-    snapshot_update(spark, t, {"a": "b", "b": "a"}, "id = 1")
-    got = {r.id: (r.a, r.b) for r in snapshot_read(spark, t).collect()}
-    assert got == {1: (20, 10), 2: (30, 40)}
 
 
 def test_vacuum_reclaims_retention_dropped_files(spark, tmp_path):
@@ -1174,51 +779,6 @@ def test_meta_binding_carried_and_replaced(spark, tmp_path):
     snapshot_commit(_df(spark, 0, 10, "c"), t, meta={"gen": 2})
     assert snapshot_meta(spark, t) == {"gen": 2}  # explicit replace
     assert snapshot_meta(spark, t, version=1) == {"gen": 1}  # history
-
-
-def test_replace_where_with_schema_evolution(spark, tmp_path):
-    """replace_where + evolve_schema: the kept complement (old schema)
-    and the replacement (wider schema) coexist in one version; reads
-    null-fill the kept rows' new column."""
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 100, "a"), t)
-    repl = _df(spark, 200, 220, "b").withColumn("score", F.lit(1.0))
-    v = snapshot_commit(
-        repl, t, replace_where="part = 0", evolve_schema=True
-    )
-    got = snapshot_read(spark, t, version=v)
-    assert got.filter("part = 0 AND tag = 'a'").count() == 0
-    assert got.filter("tag = 'b'").count() == 20
-    kept = got.filter("tag = 'a'")
-    assert kept.count() == _df(spark, 0, 100, "a").filter("part != 0").count()
-    assert kept.filter("score IS NOT NULL").count() == 0  # null-filled
-
-
-def test_dml_on_evolved_table_null_semantics(spark, tmp_path):
-    """DELETE/UPDATE on an evolved table: pre-evolution rows surface
-    NULL for the new column, so a predicate on it is NULL there —
-    DELETE keeps them, UPDATE leaves them untouched (ANSI)."""
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_delete,
-        snapshot_update,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 50, "a"), t)
-    snapshot_commit(
-        _df(spark, 50, 100, "b").withColumn("score", F.lit(5.0)),
-        t,
-        mode="append",
-        evolve_schema=True,
-    )
-    snapshot_delete(spark, t, "score > 1.0")
-    got = snapshot_read(spark, t)
-    assert got.count() == 50  # only the scored rows deleted
-    assert got.filter("tag = 'a'").count() == 50  # NULL predicate kept
-
-    snapshot_update(spark, t, {"tag": "'touched'"}, "score IS NULL")
-    got2 = snapshot_read(spark, t)
-    assert got2.filter("tag = 'touched'").count() == 50
 
 
 _XPROC_WORKER = r'''
@@ -1356,7 +916,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from ros_sql_spark.sources.snapshot import (
     SnapshotConflict,
     snapshot_commit,
-    snapshot_delete_keys,
+    snapshot_delete,
     snapshot_merge,
 )
 
@@ -1380,15 +940,14 @@ if wid == 0:
         )
         retrying(lambda: snapshot_commit(df, table, mode="append"))
 else:
-    # keyed-DML writer: merges + a keyed delete, sequential, each
+    # keyed-DML writer: merges + a ranged delete, sequential, each
     # racing the appender's commits for the version slot
     for j, tag in enumerate(("m0", "m1")):
         up = spark.createDataFrame(
             [(i, tag) for i in range(0, 20)], "id long, tag string"
         )
         retrying(lambda: snapshot_merge(up, table, keys=["id"]))
-    doomed = spark.createDataFrame([(i,) for i in range(80, 90)], "id long")
-    retrying(lambda: snapshot_delete_keys(doomed, table, keys=["id"]))
+    retrying(lambda: snapshot_delete(spark, table, prune={"id": (80, 89)}))
     up = spark.createDataFrame(
         [(i, "m2") for i in range(0, 20)], "id long, tag string"
     )
@@ -1406,8 +965,8 @@ spark.stop()
     "single-shot cross-process commit semantics stay default",
 )
 def test_cross_process_keyed_dml_soak(spark, tmp_path):
-    """r6 directive #5: the exact-file-candidacy REWRITE path (merge /
-    delete_keys, expected_version-guarded, carry-by-reference for
+    """r6 directive #5: the file-candidacy REWRITE path (merge /
+    ranged delete, expected_version-guarded, carry-by-reference for
     untouched files) must hold across separate JVMs racing an appender
     at the rename-without-overwrite commit point — not just appends.
     Final state is deterministic because the key sets are disjoint and
@@ -1447,7 +1006,7 @@ def test_cross_process_keyed_dml_soak(spark, tmp_path):
         assert p.returncode == 0 and f"OK {w}" in out, out[-2000:]
 
     vs = snapshot_versions(spark, t)
-    # 1 seed + 4 appends + 3 merges + 1 keyed delete, gap-free
+    # 1 seed + 4 appends + 3 merges + 1 ranged delete, gap-free
     assert vs == list(range(1, 10))
     got = snapshot_read(spark, t)
     rows = {r.id: r.tag for r in got.collect()}
@@ -1501,10 +1060,10 @@ def test_retention_fast_path_never_blind_drops_null_rows(spark, tmp_path):
 
 
 def test_merge_drop_enforcement_is_layout_independent(spark, tmp_path):
-    """snapshot_merge must raise for a df missing an EXISTING column
-    whether or not key pruning finds candidate files (round-8 review:
-    with candidates, allowMissingColumns silently refilled the column
-    as NULL and committed)."""
+    """snapshot_merge must raise the same error for a df missing an
+    EXISTING column whether or not key pruning finds candidate files
+    (round-8 review: with candidates, the union silently refilled the
+    column as NULL and committed)."""
     from ros_sql_spark.sources.snapshot import snapshot_merge
 
     t = str(tmp_path / "tbl")
@@ -1513,11 +1072,11 @@ def test_merge_drop_enforcement_is_layout_independent(spark, tmp_path):
 
     # keys overlap stored bounds -> candidates exist
     with pytest.raises(ValueError, match="missing existing columns"):
-        snapshot_merge(dropped, t, keys=["id"], evolve_schema=True)
+        snapshot_merge(dropped, t, keys=["id"])
     # keys beyond all bounds -> no candidates; SAME error
     far = spark.range(1000, 1010).select("id")
     with pytest.raises(ValueError, match="missing existing columns"):
-        snapshot_merge(far, t, keys=["id"], evolve_schema=True)
+        snapshot_merge(far, t, keys=["id"])
     # table unchanged by both failed statements
     assert snapshot_versions(spark, t) == [1]
 
@@ -1544,34 +1103,6 @@ def test_metadata_only_delete_bumps_batch_watermark(spark, tmp_path):
     assert snapshot_versions(spark, t)[-1] == v
 
 
-def test_merge_batch_tag_only_fallback_skips_stale_replay(spark, tmp_path):
-    """snapshot_merge_batch on a head manifest carrying only a
-    'batch:N' tag (pre-last_batch era) must skip a stale replayed
-    batch like snapshot_append_batch does (round-8 review: it
-    re-merged old values over newer keys)."""
-    from ros_sql_spark.sources.snapshot import (
-        _list_versions,
-        _read_manifest,
-        _publish_manifest,
-        snapshot_merge_batch,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 20, "new").coalesce(1), t)
-    # simulate a pre-last_batch head: tag only, no last_batch key
-    m = _read_manifest(spark, t, 1)
-    m2 = dict(m)
-    m2["version"] = 2
-    m2["tag"] = "batch:9"
-    m2.pop("last_batch", None)
-    _publish_manifest(spark, t, 2, m2)
-
-    # stale batch 8 redelivery must be a no-op
-    assert not snapshot_merge_batch(_df(spark, 0, 20, "old"), t, ["id"], 8)
-    assert snapshot_versions(spark, t)[-1] == 2
-    assert {r.tag for r in snapshot_read(spark, t).collect()} == {"new"}
-
-
 def test_vacuum_reclaims_dataless_staging_dirs(spark, tmp_path):
     """A staging directory at/below the published watermark holding NO
     manifest-visible data files (a crashed writer's _temporary
@@ -1589,87 +1120,6 @@ def test_vacuum_reclaims_dataless_staging_dirs(spark, tmp_path):
     assert not os.path.exists(os.path.dirname(ghost))
     # the live version's data is untouched
     assert snapshot_read(spark, t).count() == 20
-
-
-def test_changes_prunes_shared_files(spark, tmp_path):
-    """Round-11 manifest-pruned CDC: files present in BOTH versions
-    cancel out of the multiset diff exactly, so neither side may scan
-    them — diffing adjacent versions of a many-file table reads only
-    the delta files (inputFiles() is the proof), while the answer is
-    identical to the unpruned exceptAll."""
-    from ros_sql_spark.sources.snapshot import (
-        _read_manifest,
-        snapshot_changes,
-        snapshot_read,
-    )
-
-    t = str(tmp_path / "tbl")
-    # v1: 4 files; v2: one appended file
-    snapshot_commit(_df(spark, 0, 100, "a").repartition(4), t)
-    snapshot_commit(_df(spark, 100, 120, "b").coalesce(1), t, mode="append")
-    diff = snapshot_changes(spark, t, 1, 2)
-    m1 = set(_read_manifest(spark, t, 1)["files"])
-    m2 = set(_read_manifest(spark, t, 2)["files"])
-    delta = (m1 | m2) - (m1 & m2)
-    assert len(m1 & m2) == 4  # the carried files really are shared
-    scanned = {f.replace("file://", "file:") for f in diff.inputFiles()}
-    normalized_delta = {f.replace("file://", "file:") for f in delta}
-    assert scanned <= normalized_delta, (scanned, normalized_delta)
-    # and the pruned answer equals the unpruned one
-    rows = diff.collect()
-    assert all(r._change == "insert" for r in rows)
-    assert sorted(r.id for r in rows) == list(range(100, 120))
-    old = snapshot_read(spark, t, version=1)
-    new = snapshot_read(spark, t, version=2)
-    want_ins = sorted(
-        r.id for r in new.exceptAll(old).collect()
-    )
-    assert sorted(r.id for r in rows) == want_ins
-
-
-def test_changes_empty_after_compaction_full_rewrite(spark, tmp_path):
-    """A compaction rewrites every path — nothing is shared, the diff
-    degrades to the full scan and must still return the correct
-    (empty) answer; a keyed merge AFTER the compaction diffs only the
-    touched rows."""
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_changes,
-        snapshot_compact,
-        snapshot_merge,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 100, "a").repartition(4), t)
-    snapshot_compact(spark, t, target_files=1)
-    assert snapshot_changes(spark, t, 1, 2).count() == 0
-    snapshot_merge(_df(spark, 10, 12, "upd"), t, keys=["id"])
-    ch = snapshot_changes(spark, t, 2, 3).collect()
-    got = sorted((r._change, r.id, r.tag) for r in ch)
-    assert got == [
-        ("delete", 10, "a"), ("delete", 11, "a"),
-        ("insert", 10, "upd"), ("insert", 11, "upd"),
-    ]
-
-
-def test_changes_vacuumed_version_named_error(spark, tmp_path):
-    """A vacuumed (or never-existing) endpoint must fail with the
-    named retained-versions error, not a bare missing-manifest read."""
-    import pytest
-
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_changes,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, 0, 10, "a"), t)
-    snapshot_commit(_df(spark, 10, 20, "b"), t, mode="append")
-    snapshot_commit(_df(spark, 20, 30, "c"), t, mode="append")
-    snapshot_vacuum(spark, t, keep_last=1)
-    with pytest.raises(FileNotFoundError, match="retained versions"):
-        snapshot_changes(spark, t, 1, 3)
-    with pytest.raises(FileNotFoundError, match="retained versions"):
-        snapshot_changes(spark, t, 3, 99)
 
 
 def _sketch_events(spark, lo):
@@ -1717,16 +1167,12 @@ def _pre_state_guarded_append(spark, t, batch_id):
 def _batch_sinks():
     from ros_sql_spark.sources.snapshot import (
         snapshot_append_batch,
-        snapshot_merge_batch,
     )
     from ros_sql_spark.streaming import sketch as sk
 
     return {
         "append_batch": lambda sp, t, b: snapshot_append_batch(
             _df(sp, b, b + 5, "a"), t, b
-        ),
-        "merge_batch": lambda sp, t, b: snapshot_merge_batch(
-            _df(sp, 0, 5, f"b{b}"), t, ["id"], b
         ),
         "commit_staged_files": _staged_commit,
         "fold_kmv": lambda sp, t, b: sk.kmv_sketch_batch(
@@ -1823,3 +1269,49 @@ def test_batch_watermark_has_one_owner():
                     if a.name.startswith("_")
                 ]
     assert not bad, bad
+
+
+def test_every_snapshot_export_has_a_product_caller():
+    """Every public operation of sources/snapshot.py is reached by
+    product code: each name in its ``__all__`` appears as a code token
+    (a name, attribute or import, never only in a docstring) in some
+    other module under ``ros_sql_spark/``.  Operations only tests call
+    belong in ``tests/`` or nowhere.  Two kinds of export are exempt:
+    ``snapshot_vacuum``, the garbage collector an operator runs by hand
+    (``api.expire`` points to it), and exception classes, which the
+    module exports because it raises them."""
+    import ast
+    import pathlib
+
+    import ros_sql_spark
+
+    root = pathlib.Path(ros_sql_spark.__file__).parent
+    owner = root / "sources" / "snapshot.py"
+    owner_tree = ast.parse(owner.read_text())
+    (exports,) = [
+        [e.value for e in n.value.elts]
+        for n in owner_tree.body
+        if isinstance(n, ast.Assign)
+        and any(getattr(t, "id", None) == "__all__" for t in n.targets)
+    ]
+    raised = {
+        n.exc.func.id
+        for n in ast.walk(owner_tree)
+        if isinstance(n, ast.Raise)
+        and isinstance(n.exc, ast.Call)
+        and isinstance(n.exc.func, ast.Name)
+    }
+    tokens: set[str] = set()
+    for path in root.rglob("*.py"):
+        if path == owner:
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Name):
+                tokens.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                tokens.add(n.attr)
+            elif isinstance(n, ast.alias):
+                tokens.add(n.name)
+    exempt = {"snapshot_vacuum"} | raised
+    orphans = [e for e in exports if e not in tokens and e not in exempt]
+    assert not orphans, f"exported with no product caller: {orphans}"

@@ -1,6 +1,6 @@
 """Streaming twins (SURVEY.md §5.2 layer 3): batch↔streaming equivalence
-for session/tumbling windows, q16 cross-check, and sink idempotency
-under batch replay."""
+for session/tumbling windows, q16 cross-check, stream-stream joins, and
+the sketch sinks' idempotency under batch replay."""
 
 from __future__ import annotations
 
@@ -13,11 +13,9 @@ pytestmark = pytest.mark.slow
 from ros_sql_spark.plans.queries import q16_sessionize
 from ros_sql_spark.sources.io import load_table
 from ros_sql_spark.streaming.replay import (
-    idempotent_sink_batch,
     session_counts,
     stream_events,
     tumbling_counts,
-    write_idempotent,
 )
 from tests.conftest import SF_SMALL
 
@@ -122,38 +120,6 @@ def test_streaming_tumbling_equal_batch(spark, tmp_path):
         map(repr, (tuple(r) for r in spark.sql("SELECT * FROM tumb").collect()))
     )
     assert sres == bres
-
-
-def test_sink_idempotent_under_replay(spark, tmp_path):
-    """R7/R13 sink contract: replaying the same batch adds zero rows."""
-    sink = str(tmp_path / "sink")
-    ev = load_table(spark, SF_SMALL, "events").select("event_id", "user_id", "value")
-    idempotent_sink_batch(ev, 0, sink, ["event_id"])
-    n1 = spark.read.parquet(sink).count()
-    idempotent_sink_batch(ev, 0, sink, ["event_id"])  # redelivery
-    n2 = spark.read.parquet(sink).count()
-    assert n1 == n2 == 1000
-    # a genuinely new batch still appends
-    more = ev.withColumn("event_id", F.col("event_id") + 1_000_000)
-    idempotent_sink_batch(more, 1, sink, ["event_id"])
-    assert spark.read.parquet(sink).count() == 2000
-
-
-def test_streaming_pipeline_end_to_end(spark, tmp_path):
-    """stream_events → write_idempotent drains the whole table into the
-    sink exactly once, and a second run (fresh checkpoint, same sink)
-    appends nothing."""
-    sink = str(tmp_path / "sink2")
-    q = write_idempotent(
-        stream_events(spark, EVENTS_PATH), sink, str(tmp_path / "ck1")
-    )
-    _drain(q)
-    assert spark.read.parquet(sink).count() == 1000
-    q = write_idempotent(
-        stream_events(spark, EVENTS_PATH), sink, str(tmp_path / "ck2")
-    )
-    _drain(q)
-    assert spark.read.parquet(sink).count() == 1000  # exactly-once
 
 
 def test_stream_stream_join_matches_batch_twin(spark, tmp_path):
@@ -279,46 +245,6 @@ def test_stream_stream_left_outer_emits_after_watermark(spark, tmp_path):
     assert (1, 3) in got            # the match
     assert (2, None) in got         # unmatched left, flushed by batch B's watermark
     assert (1, None) not in got     # matched rows are not also null-padded
-
-
-def test_idempotent_sink_missing_path_ok_but_corrupt_raises(spark, tmp_path):
-    """The first-batch 'sink does not exist yet' case is the ONLY
-    swallowed read failure; a corrupt sink must raise instead of
-    silently re-appending every batch (narrowed from bare except)."""
-    import pytest
-    from ros_sql_spark.sources.io import load_table
-    from tests.conftest import SF_SMALL
-
-    ev = load_table(spark, SF_SMALL, "events").limit(10)
-    sink = str(tmp_path / "sink")
-    idempotent_sink_batch(ev, 0, sink, ["event_id"])  # missing path: fine
-    idempotent_sink_batch(ev, 0, sink, ["event_id"])  # replay: no-op
-    assert spark.read.parquet(sink).count() == 10
-
-    corrupt = tmp_path / "corrupt"
-    corrupt.mkdir()
-    (corrupt / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with pytest.raises(Exception, match="(?i)parquet|footer|infer"):
-        idempotent_sink_batch(ev, 1, str(corrupt), ["event_id"])
-
-
-def test_idempotent_sink_tolerates_precreated_empty_dir(spark, tmp_path):
-    """A sink path pre-created as an empty directory (deployment
-    mkdir -p) is the not-yet-written case, not a corrupt sink: the
-    first batch must land instead of killing the stream
-    (UNABLE_TO_INFER_SCHEMA is swallowed; real corruption still
-    raises)."""
-    import pyspark.sql.functions as F
-    from ros_sql_spark.streaming.replay import idempotent_sink_batch
-
-    sink = tmp_path / "sink"
-    sink.mkdir()
-    df = spark.range(5).select(F.col("id").alias("event_id"))
-    idempotent_sink_batch(df, 0, str(sink), ["event_id"])
-    assert spark.read.parquet(str(sink)).count() == 5
-    # redelivery still dedups
-    idempotent_sink_batch(df, 0, str(sink), ["event_id"])
-    assert spark.read.parquet(str(sink)).count() == 5
 
 
 def test_sketch_batch_occ_guard(spark, tmp_path, monkeypatch):
