@@ -74,11 +74,10 @@ def record(
     store_path: str,
     key_cols: list[str] | None = None,
     ts_col: str | None = "ts_ns",
-    mode: str = "append",
 ) -> EngineCatalog:
     """Record topic DataFrames into the nested store (R1/R7/R10/R15).
 
-    Each topic is written once, as one nested parquet table under
+    Each topic is appended once, as one nested parquet table under
     ``store_path/<mangled_topic>/<mangled_topic>``, and the catalog
     created/merged with idempotent re-declare semantics (the backref
     ledger comes from a dry-run ``normalize``, exactly as
@@ -111,7 +110,7 @@ def record(
             ts_col=ts_col if ts_col in df.columns else None,
             children=[_meta_to_dict(m) for m in ledger],
         )
-        df.write.mode(mode).parquet(_topic_path(store_path, topic))
+        df.write.mode("append").parquet(_topic_path(store_path, topic))
     os.makedirs(store_path, exist_ok=True)
     catalog.save(cat_path)
     return catalog
@@ -127,10 +126,14 @@ def _stored(
     """The topic's stored nested table, read with the declared schema
     (bare parquet) or the manifest's (snapshot table, whose files
     ``prune`` may skip) — no Spark job either way."""
-    from ros_sql_spark.sources.snapshot import _fs, snapshot_read
+    from ros_sql_spark.sources.snapshot import (
+        _fs,
+        snapshot_read,
+        snapshot_versions,
+    )
 
     path = _topic_path(store_path, topic)
-    fs, p, jvm = _fs(spark, path)
+    fs, p, _ = _fs(spark, path)
     if not fs.exists(p):
         # A topic the catalog lists but whose table dir is gone is a
         # corrupted store — fail loudly and diagnosably, never replay
@@ -139,7 +142,7 @@ def _stored(
             f"store directory {path} does not exist but the catalog "
             "lists its topic — the store was moved or partially deleted"
         )
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_manifests")):
+    if snapshot_versions(spark, path):
         return snapshot_read(spark, path, prune=prune)
     return spark.read.schema(catalog.schema_of(topic)).parquet(path)
 
@@ -217,15 +220,17 @@ def expire(
     parquet stores have no atomic-delete substrate — use the snapshot
     recorder).
     """
-    from ros_sql_spark.sources.snapshot import _fs, snapshot_delete
+    from ros_sql_spark.sources.snapshot import (
+        snapshot_delete,
+        snapshot_versions,
+    )
 
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
     entry = catalog.topics[topic]
     if not entry.ts_col:
         raise ValueError(f"topic {topic} has no ts_col: nothing to expire by")
     path = _topic_path(store_path, topic)
-    fs, p, jvm = _fs(spark, f"{path}/_manifests")
-    if not fs.exists(p):
+    if not snapshot_versions(spark, path):
         raise ValueError(
             f"{path} is not a snapshot table — expire() needs the "
             "snapshot recorder (record_stream_snapshot)"

@@ -32,9 +32,6 @@ def configure_builder(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python DataSource filter pushdown (sources/pyds.py opt-in
-        # pushdown reader requires it; harmless otherwise)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Nested-schema pruning so struct-heavy normalize plans scan only
         # the referenced leaves (SURVEY.md §4.2).
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")

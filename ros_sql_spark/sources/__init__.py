@@ -1,2 +1,1 @@
-from ros_sql_spark.sources.io import TABLES, load_table, load_tables, register_views  # noqa: F401
-from ros_sql_spark.sources.pyds import SnapshotDataSource  # noqa: F401
+from ros_sql_spark.sources.io import TABLES, load_table, load_tables  # noqa: F401

@@ -27,7 +27,6 @@ __all__ = [
     "load_table",
     "load_events",
     "load_tables",
-    "register_views",
     "read_jsonl",
     "read_csv",
     "read_orc",
@@ -216,14 +215,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver table. Lazy — zero jobs run here."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load tables and register them as temp views for spark.sql use."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
 
 
 def read_jsonl(

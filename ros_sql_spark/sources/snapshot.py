@@ -45,9 +45,9 @@ forward unchanged); a replayed batch whose id the head's watermark
 already covers is skipped.  The rule lives HERE and nowhere else:
 :func:`_next_manifest` is the only constructor of a manifest record,
 :func:`_committed_batch` the only reader of its watermark, and the
-batch sinks (:func:`snapshot_append_batch`, :func:`snapshot_fold_batch`,
-:func:`snapshot_commit_staged_files`) and the multi-table crash-recovery
-reader (:func:`snapshot_pre_state`) all go through them.
+batch sinks (:func:`snapshot_append_batch`, :func:`snapshot_fold_batch`)
+and the multi-table crash-recovery reader (:func:`snapshot_pre_state`)
+all go through them.
 
 Caveat (honest): create-exclusive is atomic on HDFS-like filesystems
 and local disk; object stores without atomic create-if-absent (plain
@@ -73,7 +73,6 @@ __all__ = [
     "snapshot_vacuum",
     "snapshot_append_batch",
     "snapshot_compact",
-    "snapshot_commit_staged_files",
     "snapshot_merge",
     "snapshot_delete",
     "snapshot_fold_batch",
@@ -174,8 +173,7 @@ def _next_manifest(
     """The manifest record of ``version`` on top of ``prev`` (the
     previous head's manifest, ``{}`` for a new table) — the ONLY
     constructor of a manifest, so every carry-forward rule lives in one
-    place.  Pure dict work (no JVM): the pure-Python staged commit uses
-    it too.
+    place.  Pure dict work (no JVM).
 
     - ``stats_cols`` is sticky: None inherits ``prev``'s;
     - files carried from ``prev`` keep their recorded stats,
@@ -622,161 +620,6 @@ def snapshot_append_batch(
         df, table, mode="append", tag=f"batch:{batch_id}",
         stats_cols=stats_cols, meta=meta,
     )
-    return True
-
-
-def _plain_local(path: str) -> str:
-    """Strip a ``file:`` scheme to a plain OS path — THE shared
-    primitive of every pure-Python local-FS code path (the staged
-    commit below and the DataSource connector in sources/pyds.py);
-    one definition so scheme handling can never drift between the
-    committer and the readers (round-10 review)."""
-    if path.startswith("file://"):
-        return path[7:]
-    if path.startswith("file:"):
-        return path[5:]
-    return path
-
-
-def _local_versions(table: str) -> list[int]:
-    """Manifest versions of a LOCAL table via plain os.listdir — the
-    pure-Python twin of :func:`_list_versions` for code that runs
-    without a JVM (DataSource hooks).  Missing dir = no versions."""
-    import os
-
-    mdir = os.path.join(_plain_local(table), _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-
-
-def _local_manifest(table: str, version: int) -> dict:
-    """Pure-Python manifest read (local twin of :func:`_read_manifest`)."""
-    import os
-
-    p = os.path.join(
-        _plain_local(table), _MANIFEST_DIR, f"v{version:05d}.json"
-    )
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def snapshot_commit_staged_files(
-    table: str,
-    staged: list[str],
-    schema_json: str,
-    batch_id: int | None = None,
-    mode: str = "append",
-) -> bool:
-    """Exactly-once MANIFEST-ONLY append of parquet files an external
-    writer already produced (the Python DataSource stream sink,
-    sources/pyds.py): the executor-written files move from their
-    pre-commit staging area into a version-private data directory and
-    ONE manifest publish makes them visible — the same two-phase shape
-    as :func:`snapshot_commit`, with the write phase owned by the
-    caller.  Returns whether a commit happened (False = replayed
-    batch; the staged files are deleted, the table is untouched).
-
-    PURE-PYTHON IO throughout: the DataSource ``commit()`` hook runs in
-    a Python runner process with NO SparkSession/JVM, so this function
-    must not touch py4j — local/``file:`` paths only, like the
-    connector it serves.  The footer scan reuses :func:`_scan_footers`
-    (its local-path branch is pyarrow-only) and the manifest publish is
-    a temp-write + ``os.link`` (atomic no-overwrite on one filesystem:
-    readers see no manifest or a complete one, and a same-version race
-    loses with :class:`SnapshotConflict` exactly like the native path).
-
-    Staging must live OUTSIDE ``{table}/data`` (vacuum's file scan
-    covers data/ only, so unreferenced in-flight files are never its
-    concern); a crash between the move and the manifest strands the
-    files in a ≤-published-version data dir with no references — the
-    exact garbage class the next vacuum reclaims.
-
-    ``batch_id=None`` is the BATCH-writer form: no watermark check, no
-    tag (``last_batch`` carries forward).  ``mode="overwrite"`` makes
-    the new snapshot exactly the staged files (no carried references);
-    the schema contract is enforced either way, like the native
-    commit."""
-    import os
-
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode={mode!r}")
-    root = _plain_local(table)
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    versions = _local_versions(table)
-    prev: dict = {}
-    if versions:
-        prev = _local_manifest(table, versions[-1])
-        if batch_id is not None and _covers(prev, batch_id):
-            for p in staged:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            return False
-        from pyspark.sql.types import StructType
-
-        prev_schema = StructType.fromJson(json.loads(prev["schema"]))
-        new_schema = StructType.fromJson(json.loads(schema_json))
-        if prev_schema.simpleString() != new_schema.simpleString():
-            raise ValueError(
-                "snapshot_commit_staged_files: schema mismatch — table "
-                f"has {prev_schema.simpleString()}, batch wrote "
-                f"{new_schema.simpleString()}"
-            )
-    latest = versions[-1] if versions else 0
-    new_version = latest + 1
-    dest = os.path.join(
-        root, "data", f"v{new_version:05d}-{uuid.uuid4().hex[:8]}"
-    )
-    moved: list[str] = []
-    if staged:
-        os.makedirs(dest, exist_ok=True)
-        for p in staged:
-            d = os.path.join(dest, os.path.basename(p))
-            os.replace(p, d)
-            # manifests record Hadoop-QUALIFIED paths ("file:/..."),
-            # exactly like every native commit: vacuum's live-set test
-            # compares manifest paths against Hadoop directory listings,
-            # and a scheme-less entry there reads as dead — vacuum
-            # deleted the CURRENT version's sink-written files
-            # (round-10 review, reproduced)
-            moved.append("file:" + os.path.abspath(d))
-    stats_cols = prev.get("stats_cols")
-    # _scan_footers' local branch is pyarrow-only; spark=None is safe
-    # for the plain paths this connector supports
-    new_files, new_stats = _scan_footers(
-        None, moved, list(stats_cols) if stats_cols else None
-    )
-    carried = list(prev.get("files", [])) if mode == "append" else []
-    manifest = _next_manifest(
-        prev,
-        new_version,
-        carried + new_files,
-        prev["schema"] if versions else schema_json,
-        new_stats=new_stats,
-        tag=None if batch_id is None else f"batch:{batch_id}",
-    )
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{new_version:05d}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    final = os.path.join(mdir, f"v{new_version:05d}.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise SnapshotConflict(
-            f"version {new_version} of {table} was published concurrently"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
     return True
 
 

@@ -55,6 +55,12 @@ __all__ = [
     "record_stream_snapshot",
 ]
 
+# Prefix of every JDBC table record_stream_jdbc writes: it guards against
+# topic names that are SQL reserved words (a bare topic "view" is a
+# Derby/ANSI syntax error as a table name) — the same class of problem
+# the reference's identifier mangling (R3) solves for column names.
+_JDBC_TABLE_PREFIX = "rs_"
+
 
 def declare_topics(
     store_path: str,
@@ -214,17 +220,12 @@ def record_stream_jdbc(
     url: str,
     driver: str | None = None,
     available_now: bool = True,
-    table_prefix: str = "rs_",
 ):
     """The full north-star pipeline (BASELINE 'Structured Streaming +
     JDBC sink'): demux a multiplexed stream, shred per topic with
     operators.normalize, and land every normalized table in a JDBC
-    database EXACTLY-ONCE.
-
-    ``table_prefix`` guards against topic names that are SQL reserved
-    words (a bare topic "view" is a Derby/ANSI syntax error as a table
-    name) — the same class of problem the reference's identifier
-    mangling (R3) solves for column names.
+    database EXACTLY-ONCE, one ``rs_<table>`` table per normalized
+    table (see :data:`_JDBC_TABLE_PREFIX`).
 
     Each table's idempotency key is its own primary key — the declared
     topic keys plus any shredding index columns that table carries
@@ -250,7 +251,7 @@ def record_stream_jdbc(
                 tbl,
                 batch_id,
                 url,
-                table_prefix + name,
+                _JDBC_TABLE_PREFIX + name,
                 [c for c in tbl.columns if c in keys or c.startswith("_idx__")],
                 driver=driver,
             )

@@ -18,17 +18,16 @@ def start_foreach_batch(
     body,
     checkpoint_path: str,
     available_now: bool = True,
-    output_mode: str = "update",
 ):
     """Start ``stream`` through a ``foreachBatch`` sink: the body owns
     delivery semantics (idempotency, watermark tags), this owns the
-    writer wiring.  ``output_mode`` is declarative only for
-    foreachBatch (the body sees every batch either way) but kept
-    explicit so intent reads at the call site."""
+    writer wiring.  The output mode is always ``update``: it is
+    declarative only for foreachBatch (the body sees every batch
+    either way)."""
     writer = (
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", checkpoint_path)
-        .outputMode(output_mode)
+        .outputMode("update")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -25,6 +25,8 @@ def _df(spark, lo, hi, tag):
 
 
 def test_commit_read_roundtrip_and_versions(spark, tmp_path):
+    from ros_sql_spark.sources.snapshot import _read_manifest
+
     t = str(tmp_path / "tbl")
     v1 = snapshot_commit(_df(spark, 0, 100, "a"), t)
     assert v1 == 1
@@ -38,6 +40,15 @@ def test_commit_read_roundtrip_and_versions(spark, tmp_path):
     # latest is the overwrite; v1 still readable (time travel)
     assert snapshot_read(spark, t).count() == 50
     assert snapshot_read(spark, t, version=1).count() == 100
+
+    # a zero-row commit: Spark's one empty part file stays out of the
+    # manifest, and the read is still schema-true
+    e = str(tmp_path / "empty")
+    snapshot_commit(spark.createDataFrame([], "doc_id bigint, text string"), e)
+    assert _read_manifest(spark, e, 1)["files"] == []
+    got = snapshot_read(spark, e)
+    assert got.count() == 0
+    assert got.columns == ["doc_id", "text"]
 
 
 def test_snapshot_isolation_under_concurrent_commit(spark, tmp_path):
@@ -1129,27 +1140,6 @@ def _sketch_events(spark, lo):
     )
 
 
-def _staged_commit(spark, t, batch_id):
-    """One pyarrow-written part file through the pure-Python staged
-    commit (the DataSource stream sink's path)."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from ros_sql_spark.sources.snapshot import snapshot_commit_staged_files
-
-    d = f"{t}-stage"
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"part-{uuid.uuid4().hex[:8]}.parquet")
-    papq.write_table(
-        pa.table({"id": pa.array([batch_id], pa.int64())}), p
-    )
-    schema_json = spark.createDataFrame([], "id bigint").schema.json()
-    return snapshot_commit_staged_files(t, [p], schema_json, batch_id)
-
-
 def _pre_state_guarded_append(spark, t, batch_id):
     """The multi-table sink pattern: commit only when the pre-state
     reader says the batch has not landed yet."""
@@ -1174,7 +1164,6 @@ def _batch_sinks():
         "append_batch": lambda sp, t, b: snapshot_append_batch(
             _df(sp, b, b + 5, "a"), t, b
         ),
-        "commit_staged_files": _staged_commit,
         "fold_kmv": lambda sp, t, b: sk.kmv_sketch_batch(
             _sketch_events(sp, b), b, t, "s", "key", 16
         ),

@@ -615,59 +615,6 @@ def main() -> int:
         checks["hh_no_heavy_key_missing"] = missing_heavy == 0
         checks["hh_err_and_state_bounded"] = over == 0
 
-        # 11. open-connector quadrants at 20x (round-10 verdict: the
-        # pyds connector was tests-only): batch sink-write the corpus
-        # digests, read the table back via the connector AND via the
-        # native manifest scan (content hashes must match exactly),
-        # then change-stream it back and compare again — both read
-        # quadrants and the batch-write quadrant exercised at scale.
-        import os as _os
-
-        from ros_sql_spark.sources.pyds import SnapshotDataSource
-        from ros_sql_spark.sources.snapshot import snapshot_read
-
-        def _pyds():
-            spark.dataSource.register(SnapshotDataSource)
-            tbl = _os.path.join(work, "pyds_tbl")
-            docs.select("doc_id", F.md5("text").alias("digest")).write.format(
-                "rosql_snapshot"
-            ).mode("append").save(tbl)
-
-            def content(df: DataFrame):
-                row = df.agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat_ws("#", "doc_id", "digest")),
-                                1, 15,
-                            ),
-                            16, 10,
-                        ).cast("bigint").cast("decimal(38,0)")
-                    ).alias("s"),  # decimal sum: 60-bit terms overflow BIGINT
-                ).collect()[0]
-                return (row.n, row.s)
-
-            native = content(snapshot_read(spark, tbl))
-            conn = content(spark.read.format("rosql_snapshot").load(tbl))
-            out_dir = _os.path.join(work, "pyds_out")
-            q = (
-                spark.readStream.format("rosql_snapshot")
-                .load(tbl)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", _os.path.join(work, "pyds_ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-            streamed = content(spark.read.parquet(out_dir))
-            return native, conn, streamed
-
-        native, conn, streamed = timed("pyds_quadrants", _pyds)
-        checks["pyds_batch_read_matches_native"] = conn == native
-        checks["pyds_change_stream_matches_native"] = streamed == native
-
         # 8. declared-suite scale probe (round-12 directive #6): the
         # bench constants (broadcast sizes, bucket counts, k+1 window
         # cuts) are tuned at sf0.1 — run the TOP-10 heavy declared
@@ -739,19 +686,19 @@ def main() -> int:
         )
 
         def _probe_dir() -> str:
-            pd = _os.path.join(work, "probe")
-            _os.makedirs(pd, exist_ok=True)
-            _os.symlink(
-                _os.path.join(work, "documents"),
-                _os.path.join(pd, "documents.parquet"),
+            pd = os.path.join(work, "probe")
+            os.makedirs(pd, exist_ok=True)
+            os.symlink(
+                os.path.join(work, "documents"),
+                os.path.join(pd, "documents.parquet"),
             )
-            _os.symlink(
-                _os.path.join(work, "embeddings"),
-                _os.path.join(pd, "embeddings.parquet"),
+            os.symlink(
+                os.path.join(work, "embeddings"),
+                os.path.join(pd, "embeddings.parquet"),
             )
             for t in ("region", "nation", "customer", "supplier", "part"):
-                _os.symlink(
-                    f"{sf_dir}/{t}.parquet", _os.path.join(pd, f"{t}.parquet")
+                os.symlink(
+                    f"{sf_dir}/{t}.parquet", os.path.join(pd, f"{t}.parquet")
                 )
             # events: raw int64 ts normalized to the bare-INT64=ns
             # convention the loader probe documents (multiply by the
