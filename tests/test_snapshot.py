@@ -25,8 +25,6 @@ def _df(spark, lo, hi, tag):
 
 
 def test_commit_read_roundtrip_and_versions(spark, tmp_path):
-    from ros_sql_spark.sources.snapshot import _read_manifest
-
     t = str(tmp_path / "tbl")
     v1 = snapshot_commit(_df(spark, 0, 100, "a"), t)
     assert v1 == 1
@@ -41,8 +39,12 @@ def test_commit_read_roundtrip_and_versions(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 50
     assert snapshot_read(spark, t, version=1).count() == 100
 
-    # a zero-row commit: Spark's one empty part file stays out of the
-    # manifest, and the read is still schema-true
+
+def test_empty_table_schema_true(spark, tmp_path):
+    """A zero-row commit: Spark's one empty part file stays out of the
+    manifest, and the read is still schema-true."""
+    from ros_sql_spark.sources.snapshot import _read_manifest
+
     e = str(tmp_path / "empty")
     snapshot_commit(spark.createDataFrame([], "doc_id bigint, text string"), e)
     assert _read_manifest(spark, e, 1)["files"] == []
