@@ -7,8 +7,10 @@ MySQL) with a per-message INSERT + commit (R7) — its throughput ceiling
 - batch: ``write_jdbc`` / ``read_jdbc`` (partitioned parallel reads,
   batched executemany writes);
 - streaming: ``jdbc_idempotent_batch`` as a foreachBatch body — key-level
-  dedup makes redelivered micro-batches exactly-once, the same contract
-  as streaming/replay.py's parquet sink.
+  dedup makes redelivered micro-batches exactly-once;
+- ``jdbc_raise_high_water``: the per-topic key high-water mark that lets
+  record_stream_jdbc skip that dedup for a batch whose keys all lie
+  above every stored key.
 
 Testing backend: embedded Apache Derby (ships with Spark's jars), so the
 JDBC path is exercised for real in this container; production swaps the
@@ -17,16 +19,23 @@ URL/driver for PostgreSQL/MySQL unchanged.
 Scale notes (100 TB):
 - writes: bound connection count with ``num_partitions`` (a 1000-executor
   write would otherwise open 1000 connections) and size ``batchsize`` to
-  the row width; idempotency belongs in the STORE at scale
-  (INSERT .. ON CONFLICT / MERGE) — the anti-join body here is the
-  database-agnostic fallback.
+  the row width.  The anti-join body reads every key of its target table
+  per batch, O(table); the high-water mark is one row per topic, read
+  and raised over one driver-side connection (milliseconds, no Spark
+  job), so a streaming recorder with increasing keys pays the anti-join
+  only on redeliveries.  Idempotency on keys that arrive out of order
+  belongs in the STORE at scale (INSERT .. ON CONFLICT / MERGE).
 - reads: always give ``partition_column``/bounds for parallelism; a bare
   read_jdbc is a single-connection scan.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import contextlib
+import json
+import os
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -35,9 +44,16 @@ __all__ = [
     "write_jdbc",
     "read_jdbc",
     "jdbc_idempotent_batch",
+    "jdbc_raise_high_water",
 ]
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+# One row per recorded topic: its root table's name and the JSON list of
+# the largest topic key any batch has begun writing.  The name lies
+# outside record_stream_jdbc's ``rs_`` namespace, so no topic can take it.
+_HIGH_WATER_TABLE = "rosql_high_water"
+_MARK_CHARS = 32672  # Derby's VARCHAR limit
 
 
 def derby_url(db_path: str, create: bool = True) -> str:
@@ -117,9 +133,170 @@ def jdbc_idempotent_batch(
         # connection drop) must fail loudly: silently skipping the
         # anti-join would re-append every redelivered row and break the
         # exactly-once contract record_stream_jdbc advertises (round-8
-        # review).  Error-text match covers Derby ("does not exist"),
-        # Postgres ("does not exist"), MySQL ("doesn't exist").
-        msg = str(exc).lower()
-        if "not exist" not in msg and "doesn't exist" not in msg:
+        # review).
+        if not _missing_table(exc):
             raise
     write_jdbc(fresh, url, table, mode="append", driver=driver)
+
+
+def _missing_table(exc: Exception) -> bool:
+    # Derby and Postgres say "does not exist", MySQL "doesn't exist"
+    msg = str(exc).lower()
+    return "not exist" in msg or "doesn't exist" in msg
+
+
+def jdbc_raise_high_water(
+    spark: SparkSession,
+    url: str,
+    tables: list[str],
+    key_cols: list[str],
+    hi: tuple,
+    driver: str | None = None,
+) -> tuple | None:
+    """Raise the high-water mark of the topic stored in ``tables`` (root
+    first; the root names the mark) to at least ``hi``, the largest key
+    of the batch about to be written, and return the mark it replaced.
+
+    Call it before the batch writes a row: the mark then bounds every
+    topic key stored in ``tables``, so a batch with unique keys all above
+    the returned mark cannot meet a stored key and may be appended as is.
+    A topic with no keyed row stored yet returns ``()``, below every key.
+    ``None`` means no mark bounded the tables, and the batch must dedup
+    against them: the tables were recorded before marks existed, and
+    the mark is seeded now from their largest stored key.  Keys are
+    tuples of ints or strs, compared as Python tuples.  Databases may
+    order strings by another collation, so string keys are not seeded: a
+    database that already holds such a topic keeps the dedup path for it.
+    """
+    new = json.dumps(list(hi))
+    if len(new) > _MARK_CHARS:
+        raise ValueError(f"key {hi!r} is too long for the {_HIGH_WATER_TABLE} mark")
+    root = tables[0]
+    with _connection(spark, url, driver) as conn:
+        # compare-and-set: a mark another writer moved meanwhile is read again
+        while True:
+            try:
+                row = _first_row(
+                    conn,
+                    f"SELECT high_water FROM {_HIGH_WATER_TABLE} WHERE table_name = ?",
+                    root,
+                )
+            except Py4JJavaError as exc:
+                if not _missing_table(exc):
+                    raise
+                _update(
+                    conn,
+                    f"CREATE TABLE {_HIGH_WATER_TABLE} (table_name VARCHAR(256) "
+                    f"NOT NULL PRIMARY KEY, high_water VARCHAR({_MARK_CHARS}) NOT NULL)",
+                )
+                row = None
+            if row is None:
+                break
+            mark = tuple(json.loads(row[0]))
+            if mark >= hi or _update(
+                conn,
+                f"UPDATE {_HIGH_WATER_TABLE} SET high_water = ? "
+                "WHERE table_name = ? AND high_water = ?",
+                new,
+                root,
+                row[0],
+            ):
+                return mark
+        # no mark yet: seed it from the largest key already stored
+        integral = all(isinstance(v, int) for v in hi)
+        stored = [
+            _largest_key(conn, t, key_cols, integral) for t in _existing(conn, tables)
+        ]
+        stored = [k for k in stored if k is not None]
+        if stored and not integral:
+            return None
+        _update(
+            conn,
+            f"INSERT INTO {_HIGH_WATER_TABLE} (table_name, high_water) VALUES (?, ?)",
+            root,
+            json.dumps(list(max([hi, *stored]))),
+        )
+    return None if stored else ()
+
+
+def _existing(conn, tables: list[str]) -> list[str]:
+    """Those of ``tables`` (unquoted names) that exist in the connection's
+    schema: one metadata lookup by their common prefix (a missing table
+    found by a failing query costs a JVM exception round trip each)."""
+    md = conn.getMetaData()
+    if md.storesUpperCaseIdentifiers():
+        fold = str.upper
+    elif md.storesLowerCaseIdentifiers():
+        fold = str.lower
+    else:
+        fold = str
+    prefix = os.path.commonprefix([fold(t) for t in tables])
+    rs = md.getTables(None, conn.getSchema(), prefix + "%", None)
+    names = set()
+    try:
+        while rs.next():
+            names.add(rs.getString("TABLE_NAME"))
+    finally:
+        rs.close()
+    return [t for t in tables if fold(t) in names]
+
+
+def _largest_key(conn, table: str, key_cols: list[str], ordered: bool):
+    """The largest fully non-NULL key stored in ``table`` (any stored key
+    when not ``ordered``), or None when it holds none: one
+    ``ORDER BY .. FETCH FIRST`` query."""
+    q = conn.getMetaData().getIdentifierQuoteString().strip()
+    cols = [f"{q}{c}{q}" for c in key_cols]
+    sql = f"SELECT {', '.join(cols)} FROM {table} WHERE " + " AND ".join(
+        f"{c} IS NOT NULL" for c in cols
+    )
+    if ordered:
+        sql += " ORDER BY " + ", ".join(f"{c} DESC" for c in cols)
+    return _first_row(conn, sql + " FETCH FIRST 1 ROWS ONLY")
+
+
+@contextlib.contextmanager
+def _connection(spark: SparkSession, url: str, driver: str | None):
+    """One driver-side JDBC connection, closed on exit; autocommit is on,
+    so every statement commits as it runs.  The module's only use of
+    ``spark._jvm``.  A named driver is loaded through the thread's context
+    class loader and asked for the connection directly: ``DriverManager``
+    cannot see a driver jar added with ``spark.jars``."""
+    jvm = spark._jvm
+    props = jvm.java.util.Properties()
+    if driver:
+        loader = jvm.java.lang.Thread.currentThread().getContextClassLoader()
+        cls = jvm.java.lang.Class.forName(driver, True, loader)
+        conn = cls.newInstance().connect(url, props)
+        if conn is None:
+            raise ValueError(f"JDBC driver {driver} does not accept {url}")
+    else:
+        conn = jvm.java.sql.DriverManager.getConnection(url, props)
+    try:
+        yield conn
+    finally:
+        conn.close()
+
+
+def _first_row(conn, sql: str, *params: str) -> tuple | None:
+    ps = conn.prepareStatement(sql)
+    try:
+        for i, p in enumerate(params, 1):
+            ps.setString(i, p)
+        rs = ps.executeQuery()
+        if not rs.next():
+            return None
+        n = rs.getMetaData().getColumnCount()
+        return tuple(rs.getObject(i) for i in range(1, n + 1))
+    finally:
+        ps.close()
+
+
+def _update(conn, sql: str, *params: str) -> int:
+    ps = conn.prepareStatement(sql)
+    try:
+        for i, p in enumerate(params, 1):
+            ps.setString(i, p)
+        return ps.executeUpdate()
+    finally:
+        ps.close()

@@ -24,6 +24,9 @@ The file stores write each topic's frame once as nested parquet (Parquet
 shreds nested records into columns itself); only the JDBC sink shreds
 with operators.normalize, one commit per (topic, normalized table) — 6
 tables per topic for a message with two nested levels and two arrays.
+The JDBC sink's probe also bounds each topic's keys, which decides
+against the topic's high-water mark whether its commits are plain
+appends or key anti-joins.
 Commits are independent, so ``_commit_concurrently`` runs them side by
 side, at most ``defaultParallelism`` at a time: on small batches (the
 streaming norm) each job is mostly fixed driver cost (~0.3 s), which
@@ -134,8 +137,9 @@ def record_stream(
     messages, never merged ones, so a dedup of the replay on the topic
     keys removes them.  That trade buys this recorder its throughput;
     when crash replay must be exactly-once use ``record_stream_snapshot``
-    (batch-watermarked atomic manifests) or ``record_stream_jdbc`` (key
-    anti-join per batch) — the two sink variants that exist for
+    (batch-watermarked atomic manifests) or ``record_stream_jdbc`` (a
+    per-topic key high-water mark, with a key anti-join for any batch
+    not wholly above it) — the two sink variants that exist for
     precisely this reason.
     """
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
@@ -156,7 +160,7 @@ def record_stream(
             stream, list(dedup_keys), watermark=dedup_watermark, ts_col=dedup_ts_col
         )
 
-    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+    def commits(topic: str, frame: DataFrame, batch_id: int, _probe) -> list:
         path = _topic_path(store_path, topic)
         return [lambda: frame.write.mode("append").parquet(path)]
 
@@ -194,7 +198,7 @@ def record_stream_snapshot(
 
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
 
-    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+    def commits(topic: str, frame: DataFrame, batch_id: int, _probe) -> list:
         table = _topic_path(store_path, topic)
         # time-series data skipping: record per-file min/max of the
         # topic's timestamp (and its key) in each commit's manifest, so
@@ -230,50 +234,125 @@ def record_stream_jdbc(
     Each table's idempotency key is its own primary key — the declared
     topic keys plus any shredding index columns that table carries
     (``_idx__*``), which is exactly the key the reference's child tables
-    are keyed by.  Redelivered micro-batches (checkpoint loss, upstream
-    replay) therefore insert nothing new: jdbc_idempotent_batch
-    anti-joins on that key before the vectorized append.
+    are keyed by.  Child keys start with the topic keys, so one key
+    high-water mark per topic (sources/jdbc.py::jdbc_raise_high_water)
+    bounds every row of its tables.  Before a batch writes, the topic
+    probe's key bounds raise that mark to the batch's largest key.  A
+    batch whose keys are unique, non-NULL and all above the previous
+    mark cannot meet a stored row, so its tables are plain appends: no
+    JDBC read and no extra Spark job.  Any other batch — a redelivery
+    (checkpoint loss, upstream replay, a retry after a crash), keys out
+    of order, a repeated key, or a topic with no mark yet — takes
+    jdbc_idempotent_batch, which anti-joins every table on its key
+    before the vectorized append and so inserts nothing twice.  Only
+    integral and string keys are marked; a topic keyed otherwise always
+    takes the anti-join.
 
     The topic catalog is read from ``store_path`` (declare_topics) —
     declare-before-write holds for the JDBC store exactly as for the
     parquet store.
     """
-    from ros_sql_spark.sources.jdbc import jdbc_idempotent_batch
+    from ros_sql_spark.sources.jdbc import jdbc_raise_high_water
 
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
+    # the probe bounds one key shared by every topic, of integral or
+    # string columns: Spark orders those as Python orders the mark
+    key_sets = {tuple(entry.key_cols) for entry in catalog.topics.values()}
+    (shared,) = key_sets if len(key_sets) == 1 else [()]
+    types = {f.name: f.dataType for f in stream.schema.fields}
+    marked = bool(shared) and all(
+        isinstance(types.get(k), T.IntegralType) or types.get(k) == T.StringType()
+        for k in shared
+    )
+    probe = _key_bounds(list(shared)) if marked else None
 
-    def commits(topic: str, frame: DataFrame, batch_id: int) -> list:
+    def commits(topic: str, frame: DataFrame, batch_id: int, bounds) -> list:
         keys = list(catalog.topics[topic].key_cols)
         norm = normalize(frame, keys, table=namify(topic))
-        return [
-            functools.partial(
-                jdbc_idempotent_batch,
-                tbl,
-                batch_id,
+        # root first: it names the topic's mark
+        names = [norm.root, *(n for n in norm.tables if n != norm.root)]
+        tables = {_JDBC_TABLE_PREFIX + n: norm.tables[n] for n in names}
+        append = False
+        if marked and bounds["_hi"] is not None:
+            prev = jdbc_raise_high_water(
+                frame.sparkSession,
                 url,
-                _JDBC_TABLE_PREFIX + name,
-                [c for c in tbl.columns if c in keys or c.startswith("_idx__")],
+                list(tables),
+                keys,
+                tuple(bounds["_hi"]),
                 driver=driver,
             )
-            for name, tbl in norm.tables.items()
+            append = (
+                prev is not None
+                and bounds["_n"] == bounds["_n_keys"]
+                and tuple(bounds["_lo"]) > prev
+            )
+        return [
+            functools.partial(
+                _commit_table,
+                tbl,
+                table,
+                [c for c in tbl.columns if c in keys or c.startswith("_idx__")],
+                batch_id,
+                url,
+                driver,
+                append,
+            )
+            for table, tbl in tables.items()
         ]
 
-    return _start(stream, topic_col, catalog, commits, checkpoint_path, available_now)
+    return _start(
+        stream, topic_col, catalog, commits, checkpoint_path, available_now, probe
+    )
 
 
-def _demux(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
-    """Yield (topic, frame) for every topic present in the micro-batch,
-    enforcing the R1/R15 declare-before-write and schema-stability
-    guards."""
+def _key_bounds(keys: list[str]) -> list:
+    """The JDBC sink's additions to the topic probe: rows (``_n``),
+    distinct fully non-NULL keys (``_n_keys``: equal to ``_n`` only when
+    every key is unique and non-NULL), and the smallest and largest fully
+    non-NULL key (``_lo``/``_hi``, structs ordered as Python orders
+    tuples of ints or of strs)."""
+    keyed = functools.reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    key = F.when(keyed, F.struct(*keys))
+    return [
+        F.count(F.lit(1)).alias("_n"),
+        F.count_distinct(*[F.col(k) for k in keys]).alias("_n_keys"),
+        F.min(key).alias("_lo"),
+        F.max(key).alias("_hi"),
+    ]
+
+
+def _commit_table(tbl, table, key_cols, batch_id, url, driver, append) -> None:
+    """Land one normalized table of a batch: a plain append when the batch
+    lies above its topic's high-water mark, else the key anti-join."""
+    from ros_sql_spark.sources import jdbc
+
+    if append:
+        jdbc.write_jdbc(tbl, url, table, driver=driver)
+    else:
+        jdbc.jdbc_idempotent_batch(tbl, batch_id, url, table, key_cols, driver=driver)
+
+
+def _demux(
+    batch: DataFrame, topic_col: str, catalog: EngineCatalog, probe: list | None
+):
+    """Yield (topic, frame, probe row) for every topic present in the
+    micro-batch, enforcing the R1/R15 declare-before-write and
+    schema-stability guards.  The probe is one job: the distinct topics,
+    or, when the sink passes ``probe`` aggregates, those per topic."""
     declared = set(catalog.topics)
-    seen = {r[0] for r in batch.select(topic_col).distinct().collect()}
-    unknown = seen - declared
+    if probe:
+        rows = batch.groupBy(topic_col).agg(*probe).collect()
+    else:
+        rows = batch.select(topic_col).distinct().collect()
+    seen = {r[0]: r for r in rows}
+    unknown = set(seen) - declared
     if unknown:
         raise ValueError(
             f"stream carries undeclared topics {sorted(unknown)}; "
             "declare_topics them first (R1 declare-before-write)"
         )
-    for topic in seen:
+    for topic, row in seen.items():
         sub = batch.filter(F.col(topic_col) == topic).drop(topic_col)
         declared_schema = catalog.schema_of(topic)
         # compare (name, type, nullability) — NOT field metadata: stream
@@ -287,7 +366,7 @@ def _demux(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
                 f"{sub.schema.simpleString()} != declared "
                 f"{declared_schema.simpleString()} (R15 guard)"
             )
-        yield topic, sub
+        yield topic, sub, row
 
 
 def _commit_concurrently(spark, commits: list) -> None:
@@ -318,10 +397,13 @@ def _start(
     commits,
     checkpoint_path: str,
     available_now: bool,
+    probe: list | None = None,
 ):
     """Start ``stream`` through the recorders' shared foreachBatch body:
     cache the batch, demux it, and run every commit thunk the sink's
-    ``commits(topic, frame, batch_id)`` returns concurrently."""
+    ``commits(topic, frame, batch_id, probe_row)`` returns concurrently.
+    ``probe``: aggregates the sink needs per topic, computed in the topic
+    probe's job (see _demux)."""
     from ros_sql_spark.streaming.util import start_foreach_batch
 
     def body(batch: DataFrame, batch_id: int) -> None:
@@ -329,8 +411,8 @@ def _start(
         try:
             thunks = [
                 c
-                for topic, frame in _demux(batch, topic_col, catalog)
-                for c in commits(topic, frame, batch_id)
+                for topic, frame, row in _demux(batch, topic_col, catalog, probe)
+                for c in commits(topic, frame, batch_id, row)
             ]
             _commit_concurrently(batch.sparkSession, thunks)
         finally:

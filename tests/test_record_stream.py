@@ -660,8 +660,8 @@ def test_recorder_commit_failure_fails_query(spark, tmp_path, monkeypatch):
     import threading
     import time
 
-    import ros_sql_spark.sources.jdbc as jdbc
     import ros_sql_spark.streaming.record as record
+    from ros_sql_spark.sources.jdbc import derby_url
     from ros_sql_spark.streaming.record import record_stream_jdbc
 
     lock = threading.Lock()
@@ -669,7 +669,7 @@ def test_recorder_commit_failure_fails_query(spark, tmp_path, monkeypatch):
     done: list[str] = []
     at_return: list[set[str]] = []
 
-    def fake_commit(tbl, batch_id, url, table, key_cols, driver=None):
+    def fake_commit(tbl, table, *args):
         with lock:
             running.add(table)
         try:
@@ -690,7 +690,7 @@ def test_recorder_commit_failure_fails_query(spark, tmp_path, monkeypatch):
             with lock:
                 at_return.append(set(running))
 
-    monkeypatch.setattr(jdbc, "jdbc_idempotent_batch", fake_commit)
+    monkeypatch.setattr(record, "_commit_table", fake_commit)
     monkeypatch.setattr(record, "_commit_concurrently", watched)
 
     store = str(tmp_path / "store")
@@ -701,7 +701,7 @@ def test_recorder_commit_failure_fails_query(spark, tmp_path, monkeypatch):
         topic_col="event_type",
         store_path=store,
         checkpoint_path=str(tmp_path / "ck"),
-        url="jdbc:unused",
+        url=derby_url(str(tmp_path / "db")),
     )
     with pytest.raises(Exception, match="injected commit failure"):
         q.awaitTermination(180)
