@@ -5,25 +5,29 @@ DB URL → schemas are created, messages land as normalized rows, a
 catalog describes the mapping; later ``playback.py`` replays messages in
 original timestamp order, optionally a time range (SURVEY.md §3.1/§3.3).
 
-Engine equivalent over a parquet store:
+Engine equivalent over a file store of snapshot tables:
 
     record(spark, {"/robot1/pose": df}, store)   # R1+R7+R10+R15
     playback(spark, store, "/robot1/pose",       # R11+R13+R14
              t0_ns=..., t1_ns=...)
     tables(spark, store, "/robot1/pose")         # R4+R5 relational views
 
-``record`` writes each topic once, as one nested parquet table (Parquet
-shreds nested records into columns itself, with repetition and
-definition levels), and persists the versioned catalog with the backref
-ledger.  ``playback`` loads the catalog, scans the topic's table,
-applies the time range and returns rows ordered by record time — one
+``record`` appends each topic once, as one atomic commit to the topic's
+nested snapshot table (sources/snapshot.py; Parquet shreds nested
+records into columns itself, with repetition and definition levels),
+and persists the versioned catalog with the backref ledger.
+``record_stream`` (streaming/record.py) writes the same tables.
+``playback`` loads the catalog, reads the topic's table from its
+manifest, skips files outside the time range by their recorded ts
+bounds, applies the range and returns rows ordered by record time — one
 scan plus one sort instead of the reference's N+1 per-row SELECTs;
 sink-side pacing is the caller's concern, exactly as in the reference.
 ``tables`` exposes the reference's normalized child tables as lazy
 operators.normalize views over the stored table; the JDBC recorder
 (streaming/record.py) is the one sink that stores them flat.
+``expire`` drops a topic's messages older than a cutoff in one commit.
 
-Filesystem note: table data (parquet dirs, snapshot manifests) goes
+Filesystem note: table data (parquet files, snapshot manifests) goes
 through Spark/Hadoop IO and works on any supported filesystem; the
 small catalog JSON is read/written with plain ``open()`` and is the one
 LOCAL-PATH piece of this API — point ``store_path`` at a shared local/
@@ -39,7 +43,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ros_sql_spark.operators.normalize import ChildMeta, normalize
-from ros_sql_spark.sources.catalog import EngineCatalog, namify
+from ros_sql_spark.sources.catalog import EngineCatalog, TopicEntry, namify
+from ros_sql_spark.sources.snapshot import (
+    snapshot_commit,
+    snapshot_delete,
+    snapshot_read,
+)
 
 __all__ = ["record", "playback", "tables", "expire", "CATALOG_FILE"]
 
@@ -68,6 +77,13 @@ def _topic_path(store_path: str, topic: str) -> str:
     return os.path.join(store_path, table, table)
 
 
+def _stats_cols(entry: TopicEntry) -> list[str]:
+    """The columns whose per-file min/max every commit of a topic
+    records: its ts column, by which playback windows and ``expire``
+    skip whole files, and its keys."""
+    return list(dict.fromkeys(c for c in (entry.ts_col, *entry.key_cols) if c))
+
+
 def record(
     spark: SparkSession,
     topics: dict[str, DataFrame],
@@ -77,8 +93,8 @@ def record(
 ) -> EngineCatalog:
     """Record topic DataFrames into the nested store (R1/R7/R10/R15).
 
-    Each topic is appended once, as one nested parquet table under
-    ``store_path/<mangled_topic>/<mangled_topic>``, and the catalog
+    Each topic is appended in one atomic commit to its nested snapshot
+    table at ``store_path/<mangled_topic>/<mangled_topic>``, and the catalog
     created/merged with idempotent re-declare semantics (the backref
     ledger comes from a dry-run ``normalize``, exactly as
     ``declare_topics`` derives it).  ``key_cols`` defaults to the
@@ -103,48 +119,40 @@ def record(
                 keys.append(ts_col)
         table = namify(topic)
         ledger = normalize(df, keys, table=table).children
-        catalog.add_topic(
+        entry = catalog.add_topic(
             topic,
             df.schema,
             key_cols=keys,
             ts_col=ts_col if ts_col in df.columns else None,
             children=[_meta_to_dict(m) for m in ledger],
         )
-        df.write.mode("append").parquet(_topic_path(store_path, topic))
+        snapshot_commit(
+            df,
+            _topic_path(store_path, topic),
+            mode="append",
+            stats_cols=_stats_cols(entry),
+        )
     os.makedirs(store_path, exist_ok=True)
     catalog.save(cat_path)
     return catalog
 
 
 def _stored(
-    spark: SparkSession,
-    store_path: str,
-    catalog: EngineCatalog,
-    topic: str,
-    prune: dict | None = None,
+    spark: SparkSession, store_path: str, topic: str, prune: dict | None = None
 ) -> DataFrame:
-    """The topic's stored nested table, read with the declared schema
-    (bare parquet) or the manifest's (snapshot table, whose files
-    ``prune`` may skip) — no Spark job either way."""
-    from ros_sql_spark.sources.snapshot import (
-        _fs,
-        snapshot_read,
-        snapshot_versions,
-    )
-
+    """The topic's snapshot table, read with its manifest's schema;
+    ``prune`` may skip files by their recorded stats.  No Spark job."""
     path = _topic_path(store_path, topic)
-    fs, p, _ = _fs(spark, path)
-    if not fs.exists(p):
-        # A topic the catalog lists but whose table dir is gone is a
+    try:
+        return snapshot_read(spark, path, prune=prune)
+    except FileNotFoundError as exc:
+        # A topic the catalog lists but whose table is gone is a
         # corrupted store — fail loudly and diagnosably, never replay
         # zero rows (silent empty playback is worse than an error).
         raise FileNotFoundError(
-            f"store directory {path} does not exist but the catalog "
-            "lists its topic — the store was moved or partially deleted"
-        )
-    if snapshot_versions(spark, path):
-        return snapshot_read(spark, path, prune=prune)
-    return spark.read.schema(catalog.schema_of(topic)).parquet(path)
+            f"store table {path} has no snapshot but the catalog lists "
+            "its topic — the store was moved or partially deleted"
+        ) from exc
 
 
 def playback(
@@ -162,10 +170,10 @@ def playback(
     """
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
     entry = catalog.topics[topic]
-    # time-range data skipping: snapshot stores record per-file ts
-    # min/max (record_stream_snapshot), so a [t0, t1) replay drops
-    # whole files at the MANIFEST tier before Spark opens anything —
-    # the hypertable chunk-exclusion shape.  Inclusive-bound form of
+    # time-range data skipping: every commit records per-file ts
+    # min/max (_stats_cols), so a [t0, t1) replay drops whole files at
+    # the MANIFEST tier before Spark opens anything — the hypertable
+    # chunk-exclusion shape.  Inclusive-bound form of
     # the half-open interval: hi = t1 - 1 (integer ns).  Pruning never
     # changes results, the exact filter below still runs.
     prune = None
@@ -176,7 +184,7 @@ def playback(
                 t1_ns - 1 if t1_ns is not None else None,
             )
         }
-    df = _stored(spark, store_path, catalog, topic, prune)
+    df = _stored(spark, store_path, topic, prune)
     if entry.ts_col:
         ts = F.col(entry.ts_col)
         if t0_ns is not None:
@@ -192,7 +200,7 @@ def tables(spark: SparkSession, store_path: str, topic: str) -> dict[str, DataFr
     over its stored nested table — the shape the JDBC sink writes."""
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
     entry = catalog.topics[topic]
-    df = _stored(spark, store_path, catalog, topic)
+    df = _stored(spark, store_path, topic)
     return normalize(df, list(entry.key_cols), table=entry.table).tables
 
 
@@ -202,9 +210,8 @@ def expire(
     topic: str,
     older_than_ns: int,
 ) -> dict[str, int]:
-    """Retention for a SNAPSHOT-table store (record_stream_snapshot):
-    atomically drop every message of ``topic`` recorded before
-    ``older_than_ns``.  The missing half of R14's time-range story —
+    """Retention: atomically drop every message of ``topic`` recorded
+    before ``older_than_ns``.  The missing half of R14's time-range story —
     playback selects a window, expire RECLAIMS everything before one.
 
     100 TB shape: one :func:`~ros_sql_spark.sources.snapshot.snapshot_delete`
@@ -215,29 +222,19 @@ def expire(
     them.  One commit, so a crash leaves the store before or after the
     expire and a re-run is a no-op.  Bytes are reclaimed by
     ``snapshot_vacuum``, as always.  Returns ``{table_name: version}``.
-
-    Requires a snapshot store whose topic has a ``ts_col`` (plain
-    parquet stores have no atomic-delete substrate — use the snapshot
-    recorder).
+    Works on every store ``record`` or ``record_stream`` wrote; the
+    topic needs a ``ts_col``.
     """
-    from ros_sql_spark.sources.snapshot import (
-        snapshot_delete,
-        snapshot_versions,
-    )
-
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
     entry = catalog.topics[topic]
     if not entry.ts_col:
         raise ValueError(f"topic {topic} has no ts_col: nothing to expire by")
-    path = _topic_path(store_path, topic)
-    if not snapshot_versions(spark, path):
-        raise ValueError(
-            f"{path} is not a snapshot table — expire() needs the "
-            "snapshot recorder (record_stream_snapshot)"
-        )
     bounds = {entry.ts_col: (None, older_than_ns - 1)}  # ts < older_than_ns
     version = snapshot_delete(
-        spark, path, prune=bounds, tag=f"expire:{older_than_ns}"
+        spark,
+        _topic_path(store_path, topic),
+        prune=bounds,
+        tag=f"expire:{older_than_ns}",
     )
     return {entry.table: version}
 

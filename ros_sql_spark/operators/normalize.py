@@ -19,8 +19,8 @@ Spark-first re-expression:
   + array_sort + transform — replacing the reference's O(rows × backrefs)
   per-row SELECT round-trips (SURVEY.md §4.1) with set-at-a-time joins.
   Reassembly order comes from the STORED index, never storage order.
-- Stores: the file stores (``api.record``, ``record_stream``,
-  ``record_stream_snapshot``) keep messages nested, because Parquet
+- Stores: the file store (snapshot tables written by ``api.record`` and
+  ``record_stream``) keeps messages nested, because Parquet
   already shreds nested records into columns; this module serves the
   JDBC recorder, which writes the flat tables, and ``api.tables``, which
   derives them as lazy views over a stored topic.

@@ -24,9 +24,10 @@ from pyspark.sql import types as T
 
 __all__ = ["SCHEMA_VERSION", "TopicEntry", "EngineCatalog", "namify"]
 
-# 2: file stores hold one nested table per topic (1 held the flat
-# normalized tables, which a version-2 reader would misread)
-SCHEMA_VERSION = 2
+# 3: each topic's nested table is a snapshot table (2 held bare parquet
+# directories, 1 the flat normalized tables; a version-3 reader finds
+# no manifest in either)
+SCHEMA_VERSION = 3
 
 _MANGLE_RE = re.compile(r"[^A-Za-z0-9_]")
 

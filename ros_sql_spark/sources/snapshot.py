@@ -42,12 +42,16 @@ Structured Streaming): a micro-batch commits with tag ``batch:<id>``;
 every manifest carries ``last_batch``, the monotone max of the previous
 manifest's watermark and its own tag's id (untagged commits carry it
 forward unchanged); a replayed batch whose id the head's watermark
-already covers is skipped.  The rule lives HERE and nowhere else:
-:func:`_next_manifest` is the only constructor of a manifest record,
-:func:`_committed_batch` the only reader of its watermark, and the
-batch sinks (:func:`snapshot_append_batch`, :func:`snapshot_fold_batch`)
-and the multi-table crash-recovery reader (:func:`snapshot_pre_state`)
-all go through them.
+already covers is skipped.  A batch committed by a named writer (tag
+``batch:<id>@<writer>``, Delta's txn appId idea) also raises that
+writer's entry in ``writer_batches``, and a writer's replay is checked
+against its own entry only, so a new writer starting again at batch 0
+is not mistaken for a replay of an old one.  The rule lives HERE and
+nowhere else: :func:`_next_manifest` is the only constructor of a
+manifest record, :func:`_committed_batch` the only reader of its
+watermark, and the batch sinks (:func:`snapshot_append_batch`,
+:func:`snapshot_fold_batch`) and the multi-table crash-recovery reader
+(:func:`snapshot_pre_state`) all go through them.
 
 Caveat (honest): create-exclusive is atomic on HDFS-like filesystems
 and local disk; object stores without atomic create-if-absent (plain
@@ -137,11 +141,13 @@ def _head(spark: SparkSession, table: str) -> tuple[int, dict]:
     return versions[-1], _read_manifest(spark, table, versions[-1])
 
 
-def _tag_batch(tag: str | None) -> int | None:
-    """The id of a ``batch:<id>`` tag; None for any other tag."""
-    if tag is not None and tag.startswith("batch:"):
-        return int(tag[6:])
-    return None
+def _tag_batch(tag: str | None) -> tuple[int | None, str | None]:
+    """(batch id, writer) of a ``batch:<id>[@<writer>]`` tag; the writer
+    is None for an unnamed one, both are None for any other tag."""
+    if tag is None or not tag.startswith("batch:"):
+        return None, None
+    batch, _, writer = tag[6:].partition("@")
+    return int(batch), writer or None
 
 
 def _committed_batch(manifest: dict) -> int | None:
@@ -149,13 +155,17 @@ def _committed_batch(manifest: dict) -> int | None:
     ``last_batch``, else (manifests from before ``last_batch`` existed)
     the id of its ``batch:<id>`` tag, else None."""
     lb = manifest.get("last_batch")
-    return lb if lb is not None else _tag_batch(manifest.get("tag"))
+    return lb if lb is not None else _tag_batch(manifest.get("tag"))[0]
 
 
-def _covers(manifest: dict, batch_id: int) -> bool:
+def _covers(manifest: dict, batch_id: int, writer: str | None = None) -> bool:
     """Whether ``manifest``'s watermark already covers ``batch_id`` (a
-    replayed batch: skip it)."""
-    lb = _committed_batch(manifest)
+    replayed batch: skip it).  With a ``writer`` only that writer's own
+    entry counts; ``last_batch`` is not consulted."""
+    if writer is None:
+        lb = _committed_batch(manifest)
+    else:
+        lb = manifest.get("writer_batches", {}).get(writer)
     return lb is not None and lb >= batch_id
 
 
@@ -182,7 +192,10 @@ def _next_manifest(
     - ``last_batch`` is the monotone max of ``prev``'s watermark and a
       ``batch:<id>`` ``tag`` — every commit carries it, so an
       interleaved untagged commit (manual append, compaction, DML)
-      cannot hide the watermark from a redelivered batch.
+      cannot hide the watermark from a redelivered batch;
+    - ``writer_batches`` maps each named writer to its last batch id:
+      a ``batch:<id>@<writer>`` ``tag`` raises that writer's entry and
+      every other commit carries the map unchanged.
     """
     manifest = {
         "version": version, "files": list(files), "schema": schema_json
@@ -202,11 +215,15 @@ def _next_manifest(
         manifest["meta"] = meta
     if tag is not None:
         manifest["tag"] = tag
-    batches = [
-        b for b in (_committed_batch(prev), _tag_batch(tag)) if b is not None
-    ]
+    batch, writer = _tag_batch(tag)
+    batches = [b for b in (_committed_batch(prev), batch) if b is not None]
     if batches:
         manifest["last_batch"] = max(batches)
+    writers = dict(prev.get("writer_batches", {}))
+    if writer is not None:
+        writers[writer] = max(batch, writers.get(writer, batch))
+    if writers:
+        manifest["writer_batches"] = writers
     return manifest
 
 
@@ -603,22 +620,30 @@ def snapshot_append_batch(
     batch_id: int,
     stats_cols: list[str] | None = None,
     meta: dict | None = None,
+    writer: str | None = None,
 ) -> bool:
     """Idempotent per-micro-batch append: commit ``df`` with tag
-    ``batch:<id>`` unless the table's newest commit already carries this
-    id or later (at-least-once redelivery → exactly-once table).
-    Returns whether a commit happened.  The foreachBatch building block
-    of ``streaming/record.py::record_stream_snapshot``, which lands one
-    table per topic per batch.
+    ``batch:<id>`` unless the table's watermark already covers this id
+    (at-least-once redelivery → exactly-once table).  Returns whether a
+    commit happened.
     ``meta`` replaces the carried cross-table binding when the commit
     lands (skipped replays leave the existing binding untouched — it
-    was already correct when the batch first committed)."""
+    was already correct when the batch first committed).
+
+    ``writer``: None skips any batch the table-wide ``last_batch``
+    covers, whoever wrote it (``operators/ann_store.py``: a full
+    redelivery through a fresh checkpoint is a no-op).  A name (the
+    recorder in ``streaming/record.py`` passes its streaming query id,
+    which lives in the checkpoint) skips only a batch that the SAME
+    writer already committed: a replay from the same checkpoint is
+    skipped, while a new checkpoint — whose batch ids restart at 0 — is
+    a new writer and its batches land."""
     _, head = _head(df.sparkSession, table)
-    if _covers(head, batch_id):
+    if _covers(head, batch_id, writer):
         return False  # replayed batch: already committed
+    tag = f"batch:{batch_id}" if writer is None else f"batch:{batch_id}@{writer}"
     snapshot_commit(
-        df, table, mode="append", tag=f"batch:{batch_id}",
-        stats_cols=stats_cols, meta=meta,
+        df, table, mode="append", tag=tag, stats_cols=stats_cols, meta=meta,
     )
     return True
 

@@ -5,8 +5,8 @@ The reference subscribes N ROS topics at once and lands each message in
 that topic's normalized tables.  Here the live bus is a multiplexed
 streaming DataFrame carrying a topic column; each micro-batch is
 demultiplexed and each topic's messages appended, still nested, to the
-one table per topic that ``api.playback`` reads — so record → store →
-ordered replay is one continuous, catalog-described pipeline:
+one snapshot table per topic that ``api.playback`` reads — so record →
+store → ordered replay is one continuous, catalog-described pipeline:
 
     cat = declare_topics(store, {"click": schema, ...}, ["event_id"])
     q = record_stream(stream, "event_type", store, ["event_id"], ck)
@@ -20,10 +20,13 @@ drift at write time.
 
 Scale notes: a micro-batch costs the topic probe (a distinct over the
 cached batch) plus one commit job per topic — 5 jobs for a 3-topic batch.
-The file stores write each topic's frame once as nested parquet (Parquet
-shreds nested records into columns itself); only the JDBC sink shreds
-with operators.normalize, one commit per (topic, normalized table) — 6
-tables per topic for a message with two nested levels and two arrays.
+The file recorder commits each topic's frame once, as nested parquet
+(Parquet shreds nested records into columns itself), to its snapshot
+table; the rest of a commit is driver-side manifest work (a head read,
+one footer read per new file for the ts and key stats, one manifest
+publish), no Spark job.  Only the JDBC sink shreds with
+operators.normalize, one commit per (topic, normalized table) — 6 tables
+per topic for a message with two nested levels and two arrays.
 The JDBC sink's probe also bounds each topic's keys, which decides
 against the topic's high-water mark whether its commits are plain
 appends or key anti-joins.
@@ -47,16 +50,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
-from ros_sql_spark.api import CATALOG_FILE, _meta_to_dict, _topic_path
+from ros_sql_spark.api import (
+    CATALOG_FILE,
+    _meta_to_dict,
+    _stats_cols,
+    _topic_path,
+)
 from ros_sql_spark.operators.normalize import normalize
 from ros_sql_spark.sources.catalog import EngineCatalog, namify
+from ros_sql_spark.sources.snapshot import snapshot_append_batch
 
-__all__ = [
-    "declare_topics",
-    "record_stream",
-    "record_stream_jdbc",
-    "record_stream_snapshot",
-]
+__all__ = ["declare_topics", "record_stream", "record_stream_jdbc"]
 
 # Prefix of every JDBC table record_stream_jdbc writes: it guards against
 # topic names that are SQL reserved words (a bare topic "view" is a
@@ -111,7 +115,7 @@ def record_stream(
     dedup_watermark: str = "1 hour",
     dedup_ts_col: str = "ts",
 ):
-    """R12/R7 twins: demux a multiplexed stream into one nested parquet
+    """R12/R7 twins: demux a multiplexed stream into one nested snapshot
     table per topic, micro-batch-at-a-time.
 
     Topic values in ``topic_col`` must match declared topic names
@@ -128,19 +132,15 @@ def record_stream(
     (the normal case for message transports) then lands exactly one row
     per key — asserted in tests/test_record_stream.py.
 
-    Delivery contract (round-8 honesty note): the bare-parquet SINK
-    here is at-least-once — a crash between the parquet append and the
-    streaming checkpoint advancing re-appends the whole micro-batch on
-    restart (dropDuplicatesWithinWatermark's state also rolls back to
-    the checkpoint, so it re-emits the same rows rather than filtering
-    them).  A redelivered batch therefore replays as whole duplicate
-    messages, never merged ones, so a dedup of the replay on the topic
-    keys removes them.  That trade buys this recorder its throughput;
-    when crash replay must be exactly-once use ``record_stream_snapshot``
-    (batch-watermarked atomic manifests) or ``record_stream_jdbc`` (a
-    per-topic key high-water mark, with a key anti-join for any batch
-    not wholly above it) — the two sink variants that exist for
-    precisely this reason.
+    Delivery contract: exactly-once per checkpoint, atomic per batch.
+    Each topic's batch lands in one snapshot commit that readers see
+    whole or not at all; a batch replayed from the same checkpoint (a
+    crash between the commit and the checkpoint's commit log) is
+    skipped by its writer's batch watermark, the writer being the
+    streaming query id the checkpoint keeps.  A fresh checkpoint is a
+    new writer: a new session's messages land, and so does a full
+    redelivery, as a second whole copy of every message.  Only
+    ``record_stream_jdbc`` dedups across checkpoints, by message key.
     """
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
     differing = {
@@ -161,55 +161,14 @@ def record_stream(
         )
 
     def commits(topic: str, frame: DataFrame, batch_id: int, _probe) -> list:
-        path = _topic_path(store_path, topic)
-        return [lambda: frame.write.mode("append").parquet(path)]
-
-    return _start(stream, topic_col, catalog, commits, checkpoint_path, available_now)
-
-
-def record_stream_snapshot(
-    stream: DataFrame,
-    topic_col: str,
-    store_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-):
-    """The recorder landing each topic's nested table in a SNAPSHOT table
-    (sources/snapshot.py) instead of a bare parquet directory: each
-    micro-batch's messages become visible ATOMICALLY (readers see a whole
-    batch or none of it — the bare-parquet recorder exposes files as
-    the committer moves them), redelivered batches are skipped by the
-    per-table batch watermark (exactly-once without key anti-joins),
-    and replayers can time-travel the store to any batch boundary.
-    Layout: one ``store_path/<table>/<table>`` snapshot table per topic;
-    read with ``snapshot_read``; same declare-before-write catalog
-    contract as record_stream.
-
-    A store is bound to the checkpoint that wrote it.  The watermark is
-    keyed by batch id alone and a fresh checkpoint restarts batch ids at
-    0, so a new checkpoint over an existing store is treated as a
-    redelivery: every batch the store's watermark covers is skipped.
-    That is what makes a fresh-checkpoint redelivery exactly-once, and
-    it also means a NEW recording session must resume the store's
-    checkpoint or write a new store — recorded with a fresh checkpoint
-    into an old store, its first batches are silently dropped.
-    """
-    from ros_sql_spark.sources.snapshot import snapshot_append_batch
-
-    catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
-
-    def commits(topic: str, frame: DataFrame, batch_id: int, _probe) -> list:
         table = _topic_path(store_path, topic)
-        # time-series data skipping: record per-file min/max of the
-        # topic's timestamp (and its key) in each commit's manifest, so
-        # time-range replays prune whole files — streaming appends are
-        # naturally time-clustered, which is exactly when manifest stats
-        # pay off (each batch's file covers one narrow ts window).
-        entry = catalog.topics[topic]
-        stats = [c for c in (entry.ts_col, *entry.key_cols) if c in frame.columns]
+        stats = _stats_cols(catalog.topics[topic])
+        writer = frame.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
         return [
             lambda: snapshot_append_batch(
-                frame, table, batch_id, stats_cols=stats or None
+                frame, table, batch_id, stats_cols=stats, writer=writer
             )
         ]
 
@@ -250,7 +209,7 @@ def record_stream_jdbc(
 
     The topic catalog is read from ``store_path`` (declare_topics) —
     declare-before-write holds for the JDBC store exactly as for the
-    parquet store.
+    file store.
     """
     from ros_sql_spark.sources.jdbc import jdbc_raise_high_water
 

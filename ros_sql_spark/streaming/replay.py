@@ -7,9 +7,10 @@ Reference parity (SURVEY.md §2.1/§3):
   commits (the reference's throughput ceiling, §4.1).
 - R7 insert / R13 playback sink: per-message SQL round-trips.
   Twins: the exactly-once recorders in ``streaming/record.py`` —
-  ``record_stream_snapshot`` (batch watermark on the snapshot manifest)
-  and ``record_stream_jdbc`` (a per-topic key high-water mark in a JDBC
-  database, with a key anti-join for any batch not wholly above it).
+  ``record_stream`` (snapshot tables; a writer's batch watermark on the
+  manifest, exactly-once per checkpoint) and ``record_stream_jdbc`` (a
+  per-topic key high-water mark in a JDBC database, with a key
+  anti-join for any batch not wholly above it).
 - Watermarks + windows: the reference never aggregates (it only stores);
   our engine adds event-time session/tumbling windows with late-data
   eviction — the streaming twin of batch q16.

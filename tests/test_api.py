@@ -72,9 +72,11 @@ def test_record_playback_nested_topic(spark, tmp_path):
         assert hashed(views[name]) == hashed(t), name
 
 
-def test_playback_rejects_flat_layout_catalog(spark, tmp_path):
+@pytest.mark.parametrize("version", [1, 2])
+def test_playback_rejects_flat_layout_catalog(spark, tmp_path, version):
     """A store whose catalog says version 1 holds the flat normalized
-    tables; playback must refuse it rather than misread it."""
+    tables, and one that says version 2 bare parquet directories;
+    playback must refuse either rather than misread it."""
     import json
 
     store = str(tmp_path / "store")
@@ -83,11 +85,31 @@ def test_playback_rejects_flat_layout_catalog(spark, tmp_path):
     cat_path = os.path.join(store, CATALOG_FILE)
     with open(cat_path) as fh:
         doc = json.load(fh)
-    doc["version"] = 1
+    doc["version"] = version
     with open(cat_path, "w") as fh:
         json.dump(doc, fh)
-    with pytest.raises(ValueError, match="catalog schema version 1 is not supported"):
+    with pytest.raises(
+        ValueError, match=f"catalog schema version {version} is not supported"
+    ):
         playback(spark, store, "/events")
+
+
+def test_record_twice_then_expire(spark, tmp_path):
+    """Two ``record`` calls append to one store: playback returns both
+    recordings' messages, and ``expire`` drops the older recording's."""
+    from ros_sql_spark.api import expire
+
+    schema = "id long, ts_ns long, ranges array<double>"
+    store = str(tmp_path / "store")
+    for msgs in ([(1, 10, [1.0]), (2, 20, [])], [(3, 30, None), (4, 40, [2.0])]):
+        record(
+            spark, {"/scan": spark.createDataFrame(msgs, schema)}, store,
+            key_cols=["id"],
+        )
+    got = [(r.id, r.ranges) for r in playback(spark, store, "/scan").collect()]
+    assert got == [(1, [1.0]), (2, []), (3, None), (4, [2.0])]
+    expire(spark, store, "/scan", 30)
+    assert [r.id for r in playback(spark, store, "/scan").collect()] == [3, 4]
 
 
 def test_playback_missing_store_dir_raises(spark, tmp_path):

@@ -222,30 +222,33 @@ def test_record_stream_checkpoint_resume_exactly_once(spark, tmp_path):
 
 def test_record_stream_snapshot_atomic_and_exactly_once(spark, tmp_path):
     """Recorder → snapshot tables: per-topic content equals the batch
-    demux, and a full redelivery from a fresh checkpoint changes
-    neither rows nor versions (manifest-tag idempotency, no key
-    anti-joins)."""
+    demux, and a batch replayed from the SAME checkpoint (a crash
+    between the snapshot commits and the checkpoint's commit log)
+    changes neither rows nor versions (the writer's batch watermark, no
+    key anti-joins)."""
     import os
 
     from ros_sql_spark.sources.catalog import namify
     from ros_sql_spark.sources.snapshot import snapshot_read, snapshot_versions
-    from ros_sql_spark.streaming.record import record_stream_snapshot
 
     store = str(tmp_path / "store")
+    ck = str(tmp_path / "ck")
     schema = _declared_schema(spark)
     declare_topics(store, {t: schema for t in TOPIC_VALUES}, ["event_id"])
 
-    def run(ck):
-        q = record_stream_snapshot(
+    def run():
+        q = record_stream(
             stream_events(spark, EVENTS_PATH),
             topic_col="event_type",
             store_path=store,
-            checkpoint_path=str(tmp_path / ck),
+            key_cols=["event_id"],
+            checkpoint_path=ck,
         )
         q.awaitTermination(180)
         assert not q.isActive
+        return q
 
-    run("ck1")
+    run()
     batch = load_table(spark, SF_SMALL, "events")
     state = {}
     for topic in TOPIC_VALUES:
@@ -255,8 +258,15 @@ def test_record_stream_snapshot_atomic_and_exactly_once(spark, tmp_path):
         assert got.count() == expect
         state[topic] = (expect, snapshot_versions(spark, t)[-1])
 
-    # full redelivery: fresh checkpoint, same store
-    run("ck2")
+    # crash before the commit log: drop the newest entry, and the
+    # restart reruns that batch under the same id and query id
+    commits = os.path.join(ck, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q = run()
+    assert int(last) in [p.batchId for p in q.recentProgress]
     for topic in TOPIC_VALUES:
         t = os.path.join(store, namify(topic), namify(topic))
         n, v = state[topic]
@@ -265,17 +275,16 @@ def test_record_stream_snapshot_atomic_and_exactly_once(spark, tmp_path):
 
 
 def test_playback_reads_snapshot_store(spark, tmp_path):
-    """playback() auto-detects snapshot tables: record_stream_snapshot →
-    ordered replay matches the batch demux, same as the parquet store."""
-    from ros_sql_spark.streaming.record import record_stream_snapshot
-
+    """playback() reads the recorder's snapshot tables: record_stream →
+    ordered replay matches the batch demux."""
     store = str(tmp_path / "store")
     schema = _declared_schema(spark)
     declare_topics(store, {t: schema for t in TOPIC_VALUES}, ["event_id"])
-    q = record_stream_snapshot(
+    q = record_stream(
         stream_events(spark, EVENTS_PATH),
         topic_col="event_type",
         store_path=store,
+        key_cols=["event_id"],
         checkpoint_path=str(tmp_path / "ck"),
     )
     q.awaitTermination(180)
@@ -299,8 +308,6 @@ def test_snapshot_store_time_range_prunes_files(spark, tmp_path):
     the filter-after-full-replay rows and (b) OPEN fewer parquet files
     than a full replay — the manifest ts stats recorded per micro-batch
     commit are doing chunk exclusion."""
-    from ros_sql_spark.streaming.record import record_stream_snapshot
-
     store = str(tmp_path / "store")
     stream_schema = stream_events(spark, EVENTS_PATH).schema
     schema = _declared_schema(spark)
@@ -324,10 +331,11 @@ def test_snapshot_store_time_range_prunes_files(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    q = record_stream_snapshot(
+    q = record_stream(
         src,
         topic_col="event_type",
         store_path=store,
+        key_cols=["event_id"],
         checkpoint_path=str(tmp_path / "ck"),
     )
     q.awaitTermination(180)
@@ -369,7 +377,6 @@ def test_expire_retention_root_and_children(spark, tmp_path):
         snapshot_read,
         snapshot_versions,
     )
-    from ros_sql_spark.streaming.record import record_stream_snapshot
 
     schema = T.StructType(
         [
@@ -397,10 +404,11 @@ def test_expire_retention_root_and_children(spark, tmp_path):
         .parquet(src)
         .withColumn("topic", F.lit("sensor"))
     )
-    q = record_stream_snapshot(
+    q = record_stream(
         stream,
         topic_col="topic",
         store_path=store,
+        key_cols=["event_id"],
         checkpoint_path=str(tmp_path / "ck"),
     )
     q.awaitTermination(180)
@@ -475,12 +483,10 @@ def test_record_stream_redelivery_replays_whole_messages(spark, tmp_path):
 
 
 def test_record_stream_snapshot_fidelity_edge_cases(spark, tmp_path):
-    """record_stream_snapshot → playback returns every message field for
-    field: NULL vs empty arrays, a NULL struct vs a struct of NULLs, an
-    array of structs holding an array, ns stamps a few ns apart and a
-    binary blob, in ts order."""
-    from ros_sql_spark.streaming.record import record_stream_snapshot
-
+    """record_stream → playback returns every message field for field:
+    NULL vs empty arrays, a NULL struct vs a struct of NULLs, an array of
+    structs holding an array, ns stamps a few ns apart and a binary
+    blob, in ts order."""
     fields = [
         T.StructField("id", T.LongType()),
         T.StructField("ts_ns", T.LongType()),
@@ -520,10 +526,11 @@ def test_record_stream_snapshot_fidelity_edge_cases(spark, tmp_path):
     ).write.parquet(src)
     store = str(tmp_path / "store")
     declare_topics(store, {"odom": schema}, ["id"])
-    q = record_stream_snapshot(
+    q = record_stream(
         spark.readStream.schema(stream_schema).parquet(src),
         topic_col="topic",
         store_path=store,
+        key_cols=["id"],
         checkpoint_path=str(tmp_path / "ck"),
     )
     q.awaitTermination(180)
@@ -553,18 +560,11 @@ def _scan_session(spark, tmp_path, name, ids):
     return spark.readStream.schema(schema).parquet(src)
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="the snapshot batch watermark is keyed by batch id alone and a "
-    "fresh checkpoint restarts batch ids at 0, so a second recording "
-    "session into the same store is skipped as a redelivery",
-)
 def test_record_stream_snapshot_second_session_lands(spark, tmp_path):
     """Two recording sessions, each with its own checkpoint, into one
-    snapshot store must replay all four messages, as they do through
-    ``record_stream``."""
-    from ros_sql_spark.streaming.record import record_stream_snapshot
-
+    snapshot store must replay all four messages: a fresh checkpoint
+    restarts batch ids at 0 but is a new writer, so its batches are not
+    skipped as a replay of the first session's."""
     store = str(tmp_path / "store")
     declare_topics(
         store,
@@ -573,10 +573,11 @@ def test_record_stream_snapshot_second_session_lands(spark, tmp_path):
         ["id"],
     )
     for session, ids in (("a", [1, 2]), ("b", [3, 4])):
-        q = record_stream_snapshot(
+        q = record_stream(
             _scan_session(spark, tmp_path, f"src_{session}", ids),
             topic_col="topic",
             store_path=store,
+            key_cols=["id"],
             checkpoint_path=str(tmp_path / f"ck_{session}"),
         )
         q.awaitTermination(180)

@@ -301,6 +301,44 @@ def test_append_batch_survives_interleaved_untagged_commit(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 12
 
 
+def test_append_batch_writer_watermark(spark, tmp_path):
+    """A named writer's replay is checked against its own entry only:
+    two writers each land batch 0, each one's replay is skipped, and the
+    writer map survives an untagged delete and a compaction."""
+    from ros_sql_spark.sources.snapshot import (
+        _head,
+        snapshot_append_batch,
+        snapshot_compact,
+        snapshot_delete,
+    )
+
+    t = str(tmp_path / "tbl")
+    assert snapshot_append_batch(_df(spark, 0, 4, "a"), t, 0, writer="qa")
+    assert snapshot_append_batch(_df(spark, 4, 8, "b"), t, 0, writer="qb")
+    assert not snapshot_append_batch(_df(spark, 0, 4, "a"), t, 0, writer="qa")
+    assert not snapshot_append_batch(_df(spark, 4, 8, "b"), t, 0, writer="qb")
+    snapshot_delete(spark, t, "id = 0")
+    snapshot_compact(spark, t)
+    assert not snapshot_append_batch(_df(spark, 0, 4, "a"), t, 0, writer="qa")
+    assert snapshot_append_batch(_df(spark, 8, 9, "a"), t, 1, writer="qa")
+    assert snapshot_read(spark, t).count() == 8
+    assert _head(spark, t)[1]["writer_batches"] == {"qa": 1, "qb": 0}
+
+
+def test_append_batch_without_writer_keeps_table_watermark(spark, tmp_path):
+    """``writer=None`` skips whatever the table-wide watermark covers and
+    records no writer; a named writer never consults that watermark."""
+    from ros_sql_spark.sources.snapshot import _head, snapshot_append_batch
+
+    t = str(tmp_path / "tbl")
+    assert snapshot_append_batch(_df(spark, 0, 4, "a"), t, 3)
+    assert not snapshot_append_batch(_df(spark, 0, 4, "a"), t, 2)
+    assert "writer_batches" not in _head(spark, t)[1]
+    assert snapshot_append_batch(_df(spark, 4, 8, "b"), t, 0, writer="qb")
+    assert not snapshot_append_batch(_df(spark, 8, 9, "c"), t, 3)
+    assert snapshot_read(spark, t).count() == 8
+
+
 def test_stats_recorded_and_pruned_read(spark, tmp_path):
     """Commit with stats_cols → manifest carries per-file min/max;
     a pruned read of a range-clustered table opens strictly fewer files
@@ -1219,9 +1257,10 @@ def test_every_batch_sink_skips_covered_replay(spark, tmp_path, sink,
 
 def test_batch_watermark_has_one_owner():
     """The batch watermark has ONE owner, sources/snapshot.py: no other
-    product module names the manifest's ``"last_batch"`` key or parses
-    a ``batch:<id>`` tag (writing one with an f-string is fine), and no
-    streaming module imports a private snapshot name."""
+    product module names the manifest's ``"last_batch"`` or
+    ``"writer_batches"`` key or parses a ``batch:<id>`` tag (writing one
+    with an f-string is fine), and no streaming module imports a private
+    snapshot name."""
     import ast
     import pathlib
 
@@ -1246,7 +1285,10 @@ def test_batch_watermark_has_one_owner():
                 isinstance(n, ast.Constant)
                 and isinstance(n.value, str)
                 and id(n) not in fstring_parts
-                and (n.value == "last_batch" or n.value.startswith("batch:"))
+                and (
+                    n.value in ("last_batch", "writer_batches")
+                    or n.value.startswith("batch:")
+                )
             ):
                 bad.append(f"{rel}:{n.lineno}: {n.value!r}")
             if (
